@@ -28,7 +28,7 @@ from typing import Any, Callable, List, Optional, Sequence, Tuple
 import pandas
 
 from pyspark.errors import PySparkValueError
-from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from ..metrics import (Distribution, DistributionValue, DoubleMetric, Entity,
@@ -79,56 +79,35 @@ class FrequenciesAndNumRows(State):
         return FrequenciesAndNumRows(merged, self.num_rows + other.num_rows)
 
 
-def frequencies_plan(data: DataFrame, grouping_columns: Sequence[str],
-                     where: Optional[str] = None) -> DataFrame:
-    """Lazy plan for SELECT cols, COUNT(*) FROM data WHERE any col NOT NULL
-    [AND where] GROUP BY cols  (parity: GroupingAnalyzers.scala:64-109)."""
+def frequencies_plan_all(data: DataFrame, grouping_columns: Sequence[str],
+                         where: Optional[str] = None) -> DataFrame:
+    """Lazy plan for SELECT cols, COUNT(*) FROM data [WHERE where] GROUP BY
+    cols — the one frequency-table builder. It keeps the all-null-key
+    group, so one GROUP BY serves both the grouping analyzers (through
+    :func:`exclude_all_null_groups`) and a Histogram of the same column
+    (through :meth:`Histogram.state_from_frequencies`)."""
     columns = list(grouping_columns) if grouping_columns else list(data.columns)
     if not columns:
         raise ValueError("no grouping columns and DataFrame has no columns")
-
-    at_least_one = None
-    for name in columns:
-        c = _col(name).isNotNull()
-        at_least_one = c if at_least_one is None else (at_least_one | c)
-
     # filter BEFORE projecting: the where may reference non-grouping
     # columns (Catalyst pushes the filter into the scan either way)
     filtered = data.filter(where) if where is not None else data
-    projected = filtered.select(*[_col(c) for c in columns]).where(at_least_one)
-
-    return (projected
-            .groupBy(*[_col(c) for c in columns])
-            .agg(F.count(F.lit(1)).alias(COUNT_COL)))
-
-
-def frequencies_plan_all(data: DataFrame, grouping_columns: Sequence[str],
-                         where: Optional[str] = None) -> DataFrame:
-    """Null-INCLUSIVE variant of :func:`frequencies_plan` — the same
-    GROUP BY without the at-least-one-key-not-null filter. The standard
-    table is EXACTLY this table minus the all-null-key group (groupBy
-    partitions rows by key, so excluding the all-null group post-shuffle
-    equals excluding all-null rows pre-shuffle) — see
-    :func:`exclude_all_null_groups`. Lets one corpus shuffle serve both
-    a grouping bucket and a same-column standalone Histogram (r13,
-    guide §2.4 "two operations keyed the same way share one
-    exchange")."""
-    columns = list(grouping_columns) if grouping_columns else list(data.columns)
-    if not columns:
-        raise ValueError("no grouping columns and DataFrame has no columns")
-    filtered = data.filter(where) if where is not None else data
-    projected = filtered.select(*[_col(c) for c in columns])
-    return (projected
+    return (filtered.select(*[_col(c) for c in columns])
             .groupBy(*[_col(c) for c in columns])
             .agg(F.count(F.lit(1)).alias(COUNT_COL)))
 
 
 def exclude_all_null_groups(freq: DataFrame,
                             grouping_columns: Sequence[str]) -> DataFrame:
-    """Drop the all-null-key group from a null-inclusive frequency table:
-    yields a table value-identical to :func:`frequencies_plan`'s."""
+    """Drop the all-null-key group: the grouping analyzers' table
+    (parity: GroupingAnalyzers.scala:64-109, WHERE any col NOT NULL).
+    groupBy partitions rows by key, so dropping the group after the
+    shuffle equals dropping its rows before it; Catalyst pushes this
+    filter below the aggregate when the table is not cached."""
+    columns = list(grouping_columns) if grouping_columns \
+        else [c for c in freq.columns if c != COUNT_COL]
     at_least_one = None
-    for name in grouping_columns:
+    for name in columns:
         c = _col(name).isNotNull()
         at_least_one = c if at_least_one is None else (at_least_one | c)
     return freq.where(at_least_one)
@@ -141,8 +120,8 @@ def compute_frequencies(data: DataFrame, grouping_columns: Sequence[str],
     shuffled, typically small) frequency table, so building the state runs
     no job at all; the reference pays a second scan of the base data here
     (GroupingAnalyzers.scala:93-97)."""
-    frequencies = frequencies_plan(data, grouping_columns, where)
-    return FrequenciesAndNumRows(frequencies)
+    return FrequenciesAndNumRows(exclude_all_null_groups(
+        frequencies_plan_all(data, grouping_columns, where), grouping_columns))
 
 
 class FrequencyBasedAnalyzer(Analyzer):
@@ -227,7 +206,6 @@ def _grouped_row_level_results(columns, where, analyzer_options) -> Column:
     NULL group counts as unique (the window partitions NULLs together, it
     does not drop them). Scale: one window shuffle on the grouping columns,
     same keys as the frequency aggregation itself."""
-    from pyspark.sql import Window
     from .scan import FilteredRowOutcome
 
     w = Window.partitionBy(*[F.col(c) for c in columns])
@@ -457,18 +435,22 @@ class MutualInformation(FrequencyBasedAnalyzer):
         if state is None:
             return self.to_failure_metric(EmptyStateError("Empty state"))
         try:
-            col1, col2 = self.columns
+            col1, col2 = (_col(c) for c in self.columns)
             total = float(state.num_rows)
-            joint = state.frequencies
-            f1, f2 = f"__f1_{col1}", f"__f2_{col2}"
-            marginal1 = joint.groupBy(col1).agg(F.sum(COUNT_COL).alias(f1))
-            marginal2 = joint.groupBy(col2).agg(F.sum(COUNT_COL).alias(f2))
-            pxy = F.col(COUNT_COL) / total
-            px = F.col(f1) / total
-            py = F.col(f2) / total
-            value = (joint
-                     .join(F.broadcast(marginal1), on=col1)
-                     .join(F.broadcast(marginal2), on=col2)
+            # each marginal is a window sum over the joint table, so no
+            # side is broadcast or joined; dropping null keys afterwards
+            # keeps the reference's inner-join semantics (a row with one
+            # null key still counts toward the other key's marginal)
+            joint = state.frequencies.select(
+                F.col(COUNT_COL).alias("__pxy"),
+                F.sum(COUNT_COL).over(Window.partitionBy(col1)).alias("__px"),
+                F.sum(COUNT_COL).over(Window.partitionBy(col2)).alias("__py"),
+                col1.isNotNull().alias("__k1"),
+                col2.isNotNull().alias("__k2"))
+            pxy = F.col("__pxy") / total
+            px = F.col("__px") / total
+            py = F.col("__py") / total
+            value = (joint.where(F.col("__k1") & F.col("__k2"))
                      .agg(F.sum(pxy * F.log(pxy / (px * py))))
                      ).collect()[0][0]
             if value is None:
@@ -554,6 +536,24 @@ class Histogram(FrequencyBasedAnalyzer):
         # num_rows stays lazy — compute_metric_from_state recovers it as
         # SUM(absolute) fused into the n_bins job (one job fewer per
         # histogram than collecting the total here)
+        return FrequenciesAndNumRows(freq)
+
+    def state_from_frequencies(self, frequencies: DataFrame
+                               ) -> FrequenciesAndNumRows:
+        """The state :meth:`compute_state_from` would build, read off a
+        null-inclusive frequency table of this plain, unbinned column
+        (:func:`frequencies_plan_all`): the keys are cast to string and
+        regrouped, a post-shuffle aggregation over distinct values. Cast
+        is per-value deterministic, so the group sums equal the corpus
+        counts, and schema and rows match compute_state_from."""
+        plain = self._plain_column
+        key = F.coalesce(_col(plain).cast("string"),
+                         F.lit(NULL_FIELD_REPLACEMENT))
+        # coalesce keeps the count column non-nullable, as COUNT(*) is
+        freq = (frequencies.select(key.alias(plain), F.col(COUNT_COL))
+                .groupBy(_col(plain))
+                .agg(F.coalesce(F.sum(COUNT_COL), F.lit(0)).cast("long")
+                     .alias(COUNT_COL)))
         return FrequenciesAndNumRows(freq)
 
     def _apply_binning(self, col: Column) -> Column:

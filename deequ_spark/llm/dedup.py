@@ -994,7 +994,7 @@ def embedding_near_duplicates(df: DataFrame, id_col: str, vec_col: str,
     # NOTE (r13, examined and REJECTED): an eager empty-candidate early
     # exit — localCheckpoint(candidates) + take(1), skip the verify
     # joins when nothing survived — was implemented and AB-measured
-    # (tools/ab_r13_wave1.py, same-JVM conf flip, 8 warm rounds): every
+    # (OPTIMIZATION_r13.md, same-JVM conf flip, 8 warm rounds): every
     # eager sample was SLOWER (median 2.37 vs 2.16 s, 1.10×); the
     # candidate materialization + probe job cost more than the two
     # small broadcast builds it skips, and at 100 TB the candidate set

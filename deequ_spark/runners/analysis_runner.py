@@ -3,16 +3,28 @@
 Reference parity:
 /root/reference/src/main/scala/com/amazon/deequ/analyzers/runners/
 AnalysisRunner.scala:101-247 (orchestration), :342-387 (scan fusion with
-offsets), :582-605 (grouping fusion), :122-134 (metric reuse from
+offsets), :560-628 (grouping fusion), :122-134 (metric reuse from
 repository), :389-416 (column pruning before agg).
 
 Execution contract (the engine's scale story):
   * N scan-shareable analyzers  → exactly ONE ``df.agg(...)`` job = one
     pass over the data, regardless of N.
-  * M grouping analyzers over the same (columns, filter) → ONE shuffle
-    (the GROUP BY) + one fused second-stage agg (single action here,
-    vs two jobs in the reference, since num_rows is recovered as
-    SUM(absolute) inside the same aggregation).
+  * Frequency groups: every analyzer that reads a frequency table — the
+    grouping analyzers (Uniqueness, Entropy, MutualInformation, …) and
+    Histogram — joins the group of its (grouping columns, where). Each
+    group runs ONE GROUP BY (one shuffle). With grouping analyzers it is
+    null-inclusive: they read it minus the all-null-key group, with
+    their second stages fused into one agg that also recovers num_rows
+    as SUM(absolute) (one action, vs two jobs in the reference), and
+    each Histogram reads its string-cast regrouping, a post-shuffle
+    aggregation over distinct values. Histograms without a grouping
+    analyzer share the first one's own string GROUP BY.
+  * A Histogram stays standalone (its own GROUP BY on the string-cast
+    value) when it has a ``binning_udf`` or ``sum_column`` (they change
+    the grouped expression), a backticked column name, or a column that
+    is float/double or not atomic: groupBy normalizes -0.0 and NaN —
+    also inside arrays and structs — before the cast, which the
+    Histogram's own string groupBy keeps apart.
   * Column pruning: the fused scan selects only referenced columns so
     parquet/DSv2 scans read a narrow projection.
 """
@@ -25,14 +37,14 @@ from typing import Any, Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import AtomicType, DataType, DoubleType, FloatType
 from pyspark.storagelevel import StorageLevel
 
 from ..analyzers.base import Analyzer, ScanShareableAnalyzer, State
-from ..analyzers.grouping import (COUNT_COL, NULL_FIELD_REPLACEMENT,
-                                  FrequenciesAndNumRows,
+from ..analyzers.grouping import (COUNT_COL, FrequenciesAndNumRows,
                                   FrequencyBasedAnalyzer, Histogram,
                                   ScanShareableFrequencyBasedAnalyzer,
-                                  exclude_all_null_groups, frequencies_plan,
+                                  exclude_all_null_groups,
                                   frequencies_plan_all)
 from ..compat import CamelCaseMixin, PyDeequCompatMeta
 from ..metrics import DoubleMetric, Metric
@@ -124,7 +136,7 @@ def _run_task_groups(data: DataFrame, tasks: List[Any]) -> AnalyzerContext:
     """Execute the runner's independent per-group actions, overlapped.
 
     Each task is one self-contained Spark action chain over a disjoint
-    analyzer set (fused scan / KLL pass / one grouping bucket / one
+    analyzer set (fused scan / KLL pass / one frequency group / one
     standalone analyzer). With ≥2 tasks they are submitted from a small
     thread pool so one group's tasks back-fill executors idled by
     another group's straggler tail (guide §2.6 — actions are only
@@ -194,11 +206,12 @@ def do_analysis_run(data: DataFrame,
     scanned once with the usual fusion, its states are merged with the
     prior ones, and metrics come from the merged states — the incremental
     pattern (IncrementalAnalysisTest.scala:30-105). ``save_states_with``
-    then persists the MERGED states, so consecutive deltas chain. When
-    both point at the SAME FileSystemStateProvider path, construct it
-    with ``allow_overwrite=True`` — the merged write replaces the prior
-    state file, and the default (HdfsStateProvider parity) refuses
-    overwrites.
+    then persists the MERGED states, so consecutive deltas chain. Both
+    may be the SAME FileSystemStateProvider, constructed with
+    ``allow_overwrite=True`` (the default, HdfsStateProvider parity,
+    refuses the second write): each metric is computed before its merged
+    state is persisted, and a frequency table is written beside the one
+    it was merged from and then swapped in.
 
     ``keep_state_cache=True`` (r12 perf) leaves DataFrame-valued states
     (grouping frequency tables) CACHED when they are saved into
@@ -215,10 +228,16 @@ def do_analysis_run(data: DataFrame,
     if aggregate_with is not None:
         from ..states import InMemoryStateProvider
         delta_states = InMemoryStateProvider()
-        do_analysis_run(data, analyzers, save_states_with=delta_states)
-        ctx = run_on_aggregated_states(
-            data, analyzers, [aggregate_with, delta_states],
-            save_states_with=save_states_with)
+        # the delta's frequency tables stay cached through the merge,
+        # which reads each of them twice (metric, then persist)
+        do_analysis_run(data, analyzers, save_states_with=delta_states,
+                        keep_state_cache=True)
+        try:
+            ctx = run_on_aggregated_states(
+                data, analyzers, [aggregate_with, delta_states],
+                save_states_with=save_states_with)
+        finally:
+            delta_states.unpersist()
         if metrics_repository is not None and save_or_append_results_with_key is not None:
             metrics_repository.save(save_or_append_results_with_key, ctx)
         return ctx
@@ -257,79 +276,34 @@ def do_analysis_run(data: DataFrame,
         except Exception as exc:  # noqa: BLE001
             results.metric_map[a] = a.to_failure_metric(exc)
 
-    # 3. partition by execution strategy (:154-160)
+    # 3. partition by execution strategy (:154-160): every frequency
+    # consumer joins the group of its (columns, where)
     from ..analyzers.kll import KLLSketch, compute_kll_states
     scanning = [a for a in passed if isinstance(a, ScanShareableAnalyzer)]
-    grouping = [a for a in passed
-                if isinstance(a, FrequencyBasedAnalyzer)
-                and not isinstance(a, Histogram)]
     klls = [a for a in passed if isinstance(a, KLLSketch)]
-    others = [a for a in passed
-              if a not in scanning and a not in grouping and a not in klls]
+    types = {f.name: f.dataType for f in schema.fields}
+    groups: Dict[Tuple, List[FrequencyBasedAnalyzer]] = {}
+    for a in passed:
+        key = _frequency_key(a, types)
+        if key is not None:
+            groups.setdefault(key, []).append(a)
+    grouped = {a for members in groups.values() for a in members}
+    others = [a for a in passed if a not in grouped
+              and a not in scanning and a not in klls]
 
     # 4-6. the execution groups below — the fused scan, the shared KLL
-    # Arrow pass, each grouping bucket, and each standalone analyzer —
+    # Arrow pass, each frequency group, and each standalone analyzer —
     # are INDEPENDENT Spark actions over the same immutable input, yet
     # they used to run strictly one after another, so every group's
     # straggler tail left the cluster idle (guide §2.6 "overlap
     # independent jobs": actions are only sequential because driver
     # code calls them sequentially). They are built as task closures
     # and submitted from a small thread pool; each task touches a
-    # DISJOINT set of analyzers and returns its own AnalyzerContext,
-    # and the contexts merge in submission order, so the resulting
-    # metric map (values AND iteration order) is identical to the
-    # sequential run. `spark.deequ.runner.maxConcurrentGroups` bounds
-    # the in-flight actions (guide: 2-3 in flight is plenty — enough to
-    # back-fill a tail, not enough to fight for executors); 1 restores
-    # fully sequential submission.
-    buckets: Dict[Tuple, List[FrequencyBasedAnalyzer]] = {}
-    for a in grouping:
-        key = (tuple(sorted(a.grouping_columns)), getattr(a, "where", None))
-        buckets.setdefault(key, []).append(a)
-
-    # r13 (guide §2.4 "two operations keyed the same way can share one
-    # exchange"): a standalone Histogram whose (column, where) matches a
-    # grouping bucket rides THAT bucket's shuffle instead of running its
-    # own corpus-wide groupBy. The shared table is the null-INCLUSIVE
-    # raw groupBy: the bucket's view is it minus the all-null-key group
-    # (exactly frequencies_plan's pre-shuffle exclusion) and the
-    # Histogram's view is a post-shuffle string-cast re-aggregation of
-    # it (cast is per-value deterministic, so regrouping the tiny
-    # frequency table by cast(key) sums to exactly the corpus-level
-    # counts). Guards: no binning/sum_column (those change the grouped
-    # expression), no float/double column (groupBy normalizes -0.0→0.0
-    # and NaN bit patterns BEFORE the cast, a corpus-level string
-    # groupBy would not), plain unquoted column name, and no state
-    # provider (the saved bucket state must keep its standalone cache
-    # lifecycle). Identical values either way — only one Exchange
-    # where two ran.
-    shared_hists: Dict[Tuple, List[Histogram]] = {}
-    others_canonical = list(others)
-    share = True
-    try:
-        share = str(data.sparkSession.conf.get(
-            "spark.deequ.runner.shareHistogramShuffle", "true")).lower() \
-            == "true"
-    except Exception:  # noqa: BLE001 — conf unreadable → default on
-        pass
-    if share and buckets and save_states_with is None:
-        schema_by_name = {f.name: f.dataType for f in schema.fields}
-        remaining = []
-        for a in others:
-            key = None
-            if (type(a) is Histogram and a.binning_udf is None
-                    and a.sum_column is None
-                    and a.column == a._plain_column
-                    and a.column in schema_by_name
-                    and schema_by_name[a.column].typeName()
-                    not in ("float", "double")):
-                key = ((a.column,), a.where)
-            if key is not None and key in buckets:
-                shared_hists.setdefault(key, []).append(a)
-            else:
-                remaining.append(a)
-        others = remaining
-
+    # DISJOINT set of analyzers and returns its own AnalyzerContext.
+    # `spark.deequ.runner.maxConcurrentGroups` bounds the in-flight
+    # actions (guide: 2-3 in flight is plenty — enough to back-fill a
+    # tail, not enough to fight for executors); 1 restores fully
+    # sequential submission.
     def run_klls() -> AnalyzerContext:
         # ONE extra Arrow pass for ALL KLL columns combined
         # (parity: KLLRunner.computeKLLSketchesInExtraPass, :162-167)
@@ -347,7 +321,8 @@ def do_analysis_run(data: DataFrame,
         return ctx
 
     def run_standalone(a: Analyzer) -> AnalyzerContext:
-        # standalone execution (Histogram, HistogramBinned, CustomSql…)
+        # standalone execution (HistogramBinned, CustomSql, a Histogram
+        # that cannot share its column's GROUP BY…)
         ctx = AnalyzerContext()
         try:
             state = a.compute_state_from(data)
@@ -370,38 +345,28 @@ def do_analysis_run(data: DataFrame,
             data, scanning, save_states_with))
     if klls:
         tasks.append(run_klls)
-    for (cols_key, where), bucket in buckets.items():
-        hists = shared_hists.get((cols_key, where), [])
-        tasks.append(lambda b=bucket, w=where, h=hists:
-                     _run_grouping_analyzers(
-                         data, list(b[0].grouping_columns), w, b,
-                         save_states_with, keep_state_cache=keep_state_cache,
-                         shared_histograms=h))
+    for (_, where), members in groups.items():
+        tasks.append(lambda m=members, w=where: _run_frequency_group(
+            data, list(m[0].grouping_columns), w, m, run_standalone,
+            save_states_with, keep_state_cache))
     for a in others:
         tasks.append(lambda a=a: run_standalone(a))
+    task_results = _run_task_groups(data, tasks).metric_map
 
-    task_results = _run_task_groups(data, tasks)
-    if shared_hists:
-        # histogram metrics were computed inside a bucket's task — put
-        # the merged map back in the exact order the unshared run
-        # produces (scan, KLL, buckets, standalones), so downstream
-        # metric rendering is byte-identical
-        canonical = list(scanning) + list(klls)
-        for b in buckets.values():
-            # a bucket task's map order is shareable-then-non-shareable
-            canonical += [a for a in b if isinstance(
-                a, ScanShareableFrequencyBasedAnalyzer)]
-            canonical += [a for a in b if not isinstance(
-                a, ScanShareableFrequencyBasedAnalyzer)]
-        canonical += others_canonical
-        ordered = AnalyzerContext()
-        for a in canonical:
-            if a in task_results.metric_map:
-                ordered.metric_map[a] = task_results.metric_map[a]
-        for a, m in task_results.metric_map.items():
-            ordered.metric_map.setdefault(a, m)
-        task_results = ordered
-    results += task_results
+    # one metric order for every run, whatever task computed what: scan,
+    # KLL, grouping analyzers (fused second stage first), then
+    # Histograms and the other standalone analyzers in input order
+    order = scanning + klls
+    for members in groups.values():
+        bucket = [a for a in members if not isinstance(a, Histogram)]
+        order += [a for a in bucket if isinstance(
+            a, ScanShareableFrequencyBasedAnalyzer)]
+        order += [a for a in bucket if not isinstance(
+            a, ScanShareableFrequencyBasedAnalyzer)]
+    order += [a for a in passed
+              if a in others or isinstance(a, Histogram)]
+    for a in order:
+        results.metric_map[a] = task_results[a]
 
     # 7. store newly computed metrics ONLY under an explicit save key
     if metrics_repository is not None and save_or_append_results_with_key is not None:
@@ -480,86 +445,131 @@ def _run_scanning_analyzers(data: DataFrame,
     return ctx
 
 
-def _run_grouping_analyzers(data: DataFrame,
-                            grouping_columns: List[str],
-                            where: Optional[str],
-                            analyzers: List[FrequencyBasedAnalyzer],
-                            save_states_with=None,
-                            keep_state_cache: bool = False,
-                            shared_histograms: Optional[List[Histogram]]
-                            = None) -> AnalyzerContext:
-    """One shuffle for the whole bucket; fused second stage
-    (AnalysisRunner.scala:560-628).
+def _frequency_key(a: Analyzer, types: Dict[str, DataType]
+                   ) -> Optional[Tuple]:
+    """The (sorted grouping columns, where) whose frequency table ``a``
+    reads, or None when it runs standalone. A Histogram joins only on a
+    plain, unbinned, unweighted column of an atomic, non-float type:
+    binning and sum_column change the grouped expression, and groupBy
+    normalizes -0.0 and NaN of a float or double — also one nested in an
+    array or struct — BEFORE its string cast, which the Histogram's own
+    string groupBy keeps apart."""
+    if isinstance(a, Histogram):
+        dtype = types.get(a.column)
+        if (type(a) is not Histogram or a.binning_udf is not None
+                or a.sum_column is not None or a.column != a._plain_column
+                or not isinstance(dtype, AtomicType)
+                or isinstance(dtype, (FloatType, DoubleType))):
+            return None
+        return (a.column,), a.where
+    if isinstance(a, FrequencyBasedAnalyzer):
+        return tuple(sorted(a.grouping_columns)), getattr(a, "where", None)
+    return None
 
-    ``shared_histograms`` (r13, guide §2.4): standalone Histograms on
-    the bucket's single column/filter that would otherwise pay their own
-    corpus shuffle. The bucket then groups WITHOUT the null-key
-    exclusion (persisted once); the bucket's analyzers read the
-    all-null-group-excluded view (value-identical to frequencies_plan)
-    and each histogram reads a post-shuffle string-cast re-aggregation
-    of the same table (value-identical to its own corpus groupBy — cast
-    is per-value deterministic, so group sums equal corpus counts)."""
+
+def _run_frequency_group(data: DataFrame,
+                         grouping_columns: List[str],
+                         where: Optional[str],
+                         members: List[FrequencyBasedAnalyzer],
+                         run_standalone,
+                         save_states_with=None,
+                         keep_state_cache: bool = False) -> AnalyzerContext:
+    """ONE GROUP BY serves every member of one (columns, where) group
+    (AnalysisRunner.scala:560-628). With grouping analyzers it is the
+    null-inclusive table: they read it minus the all-null-key group,
+    their second stages fused into one agg that also recovers num_rows,
+    and Histograms read its string-cast regrouping. Histograms alone
+    share the first one's own string GROUP BY. A table is persisted when
+    more than one job reads it; a view over a table cached here is
+    persisted only when, under ``keep_state_cache``, it is a saved
+    state's ``frequencies`` and so must outlive the group. Caches are
+    released on exit, except those.
+
+    Failures: grouping analyzers keep the reference's all-fail contract
+    (AnalysisTest.scala:342-365, 398-427), isolating per analyzer only
+    when the fused job itself fails; a Histogram whose metric fails here
+    falls back to its standalone path."""
     ctx = AnalyzerContext()
-    hists = list(shared_histograms or [])
-    freq_incl = None
-    try:
-        if hists:
-            freq_incl = frequencies_plan_all(data, grouping_columns, where)
-            frequencies = exclude_all_null_groups(freq_incl,
-                                                  grouping_columns)
-        else:
-            frequencies = frequencies_plan(data, grouping_columns, where)
-    except Exception as exc:  # noqa: BLE001  (e.g. invalid `where` SQL)
-        for a in analyzers + hists:
-            ctx.metric_map[a] = a.to_failure_metric(exc)
-        return ctx
-
-    shareable = [a for a in analyzers
+    hists = [a for a in members if isinstance(a, Histogram)]
+    bucket = [a for a in members if not isinstance(a, Histogram)]
+    shareable = [a for a in bucket
                  if isinstance(a, ScanShareableFrequencyBasedAnalyzer)]
-    non_shareable = [a for a in analyzers if a not in shareable]
+    rest = [a for a in bucket if a not in shareable]
+    saving = save_states_with is not None
+    keep = keep_state_cache and saving
+    cached: List[DataFrame] = []
+    kept: List[DataFrame] = []
 
-    # persist the (small, post-shuffle) frequency table only when >1 action
-    # will consume it (parity :576-578, 626). With shared histograms the
-    # CACHED frame is the null-inclusive table — the bucket view and every
-    # histogram view are cheap post-shuffle derivations of it.
-    needs_persist = bool(non_shareable) or (save_states_with is not None) \
-        or bool(hists)
-    cached = None
-    if needs_persist:
-        cached = (freq_incl if freq_incl is not None else frequencies) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        if freq_incl is not None:
-            freq_incl = cached
-            frequencies = exclude_all_null_groups(freq_incl,
-                                                  grouping_columns)
-        else:
-            frequencies = cached
+    def persisted(df: DataFrame, readers: int) -> DataFrame:
+        # once a table is cached here, every later one is a view over it
+        # whose readers re-read that cache: cached only to be kept
+        if readers <= 1 or (cached and not keep):
+            return df
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        cached.append(df)
+        return df
 
-    def _histogram_metrics() -> None:
-        """Derive each shared histogram's table from the cached
-        null-inclusive frequencies: coalesce(cast(key AS string),
-        NullValue), regroup, sum counts — a tiny post-shuffle exchange
-        over distinct values, not a corpus pass."""
-        for h in hists:
+    def save(analyzers, state) -> None:
+        if saving:
+            for a in analyzers:
+                save_states_with.persist(a, state)
+            kept.append(state.frequencies)
+
+    try:
+        try:
+            if bucket:
+                table = persisted(frequencies_plan_all(
+                    data, grouping_columns, where), 1 + bool(hists))
+                # readers: the fused job, each other analyzer, the saved
+                # state
+                view = persisted(
+                    exclude_all_null_groups(table, grouping_columns),
+                    1 + len(rest) + saving)
+        except Exception as exc:  # noqa: BLE001 (e.g. invalid `where` SQL)
+            for a in bucket:
+                ctx.metric_map[a] = a.to_failure_metric(exc)
+            for h in hists:
+                ctx += run_standalone(h)
+            return ctx
+        if bucket:
+            ctx += _run_grouping_analyzers(data, view, shareable, rest, save)
+        if hists:
             try:
-                plain = h._plain_column
-                key = F.col(f"`{plain}`")
-                derived = (freq_incl.select(
-                    F.coalesce(key.cast("string"),
-                               F.lit(NULL_FIELD_REPLACEMENT)).alias(plain),
-                    F.col(COUNT_COL))
-                    .groupBy(F.col(f"`{plain}`"))
-                    .agg(F.sum(COUNT_COL).cast("long").alias(COUNT_COL)))
-                ctx.metric_map[h] = h.compute_metric_from_state(
-                    FrequenciesAndNumRows(derived))
-            except Exception as exc:  # noqa: BLE001
-                ctx.metric_map[h] = h.to_failure_metric(exc)
+                state = (hists[0].state_from_frequencies(table) if bucket
+                         else hists[0].compute_state_from(data))
+                state = FrequenciesAndNumRows(persisted(
+                    state.frequencies, len(hists) + saving))
+            except Exception:  # noqa: BLE001 — each falls back below
+                state = None
+            for h in hists:
+                metric = h.compute_metric_from_state(state)
+                try:
+                    if metric.is_success:
+                        save([h], state)
+                        ctx.metric_map[h] = metric
+                        continue
+                except Exception:  # noqa: BLE001 — standalone reports it
+                    pass
+                ctx += run_standalone(h)
+        return ctx
+    finally:
+        for df in cached:
+            if not (keep_state_cache and any(df is k for k in kept)):
+                df.unpersist()
 
-    # fused second stage: SUM(absolute) at offset 0 recovers num_rows in the
-    # SAME action as every analyzer's aggregates
+
+def _run_grouping_analyzers(data: DataFrame, frequencies: DataFrame,
+                            shareable: List[FrequencyBasedAnalyzer],
+                            rest: List[FrequencyBasedAnalyzer],
+                            save) -> AnalyzerContext:
+    """The grouping analyzers of one frequency group: one fused
+    second-stage agg over their table (SUM(absolute) at offset 0
+    recovers num_rows in the SAME action), then the analyzers that
+    cannot fuse (MutualInformation) read the same table."""
+    ctx = AnalyzerContext()
+    analyzers = shareable + rest
     aggregations = [F.sum(F.col(COUNT_COL)).cast("long")]
     offsets: List[int] = []
-    current = 1
     for a in shareable:
         try:
             aggs = a.aggregation_functions()
@@ -568,16 +578,9 @@ def _run_grouping_analyzers(data: DataFrame,
             # fused second stage fails every analyzer sharing the GROUP BY
             for other in analyzers:
                 ctx.metric_map[other] = other.to_failure_metric(exc)
-            # shared histograms do not share the second stage: compute
-            # them from the (still valid) inclusive table, as standalone
-            # execution would have succeeded
-            _histogram_metrics()
-            if cached is not None:
-                cached.unpersist()
             return ctx
+        offsets.append(len(aggregations))
         aggregations.extend(aggs)
-        offsets.append(current)
-        current += len(aggs)
 
     try:
         result = frequencies.agg(*aggregations).collect()[0]
@@ -589,14 +592,6 @@ def _run_grouping_analyzers(data: DataFrame,
                 ctx.metric_map[a] = a.compute_metric_from_state(state)
             except Exception as exc:  # noqa: BLE001
                 ctx.metric_map[a] = a.to_failure_metric(exc)
-        for h in hists:
-            try:
-                state = h.compute_state_from(data)
-                ctx.metric_map[h] = h.compute_metric_from_state(state)
-            except Exception as exc:  # noqa: BLE001
-                ctx.metric_map[h] = h.to_failure_metric(exc)
-        if cached is not None:
-            cached.unpersist()
         return ctx
     num_rows = int(result[0] or 0)
 
@@ -604,24 +599,12 @@ def _run_grouping_analyzers(data: DataFrame,
         ctx.metric_map[a] = a.metric_from_aggregation_result(result, offset, num_rows)
 
     state = FrequenciesAndNumRows(frequencies, num_rows)
-    if save_states_with is not None:
-        for a in analyzers:
-            save_states_with.persist(a, state)
-    for a in non_shareable:
+    for a in rest:
         try:
             ctx.metric_map[a] = a.compute_metric_from_state(state)
         except Exception as exc:  # noqa: BLE001
             ctx.metric_map[a] = a.to_failure_metric(exc)
-
-    _histogram_metrics()
-
-    # keep_state_cache: the SAVED state keeps its materialized
-    # frequency table — the caller (streaming merge) reads it once more
-    # and unpersists; dropping it here would make every later state
-    # merge re-run the groupBy shuffle
-    if cached is not None and not (keep_state_cache
-                                   and save_states_with is not None):
-        cached.unpersist()
+    save(analyzers, state)
     return ctx
 
 
@@ -640,9 +623,11 @@ def run_on_aggregated_states(schema_source: DataFrame,
                 state = loader.load(a)
                 if state is not None:
                     merged = state if merged is None else merged.merge(state)
+            # the metric first: the merged state may read the very files
+            # its persist replaces (one provider loads and saves)
+            ctx.metric_map[a] = a.compute_metric_from_state(merged)
             if save_states_with is not None and merged is not None:
                 save_states_with.persist(a, merged)
-            ctx.metric_map[a] = a.compute_metric_from_state(merged)
         except Exception as exc:  # noqa: BLE001
             ctx.metric_map[a] = a.to_failure_metric(exc)
     return ctx

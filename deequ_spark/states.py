@@ -16,6 +16,7 @@ import dataclasses
 import hashlib
 import json
 import os
+import shutil
 from typing import Any, Dict, Optional
 
 from pyspark.sql import SparkSession
@@ -46,6 +47,15 @@ class InMemoryStateProvider(StateProvider):
     def load(self, analyzer: Analyzer) -> Optional[State]:
         return self._states.get(analyzer)
 
+    def unpersist(self) -> None:
+        """Release the cached frequency tables of the held states — the
+        caches ``do_analysis_run(keep_state_cache=True)`` leaves to its
+        caller."""
+        for state in self._states.values():
+            freq = getattr(state, "frequencies", None)
+            if freq is not None:
+                freq.unpersist()
+
 
 _SCALAR_STATES = {
     "NumMatches": B.NumMatches,
@@ -65,6 +75,10 @@ _SCALAR_STATES = {
     # HistogramBinned edges/counts (StateProviderTest.scala:194-210)
     "_BinnedState": G._BinnedState,
 }
+
+
+# a frequency table's row count, a file inside its parquet directory
+_NUM_ROWS = "_num_rows.json"
 
 
 class FileSystemStateProvider(StateProvider):
@@ -115,10 +129,25 @@ class FileSystemStateProvider(StateProvider):
                 f"State for {analyzer} already exists at {target}; pass "
                 "allow_overwrite=True to replace it")
         if isinstance(state, G.FrequenciesAndNumRows):
-            state.frequencies.write.mode("overwrite").parquet(target + ".freq.parquet")
-            with open(target + ".json", "w") as f:
-                json.dump({"stateType": "FrequenciesAndNumRows",
-                           "numRows": state.num_rows}, f)
+            # the state may be a lazy plan over the live table (one
+            # provider as both aggregate_with and save_states_with), which
+            # an in-place overwrite would delete mid-read: write beside it
+            # with its row count inside, then swap — the rename of the new
+            # directory is the one commit point, so a crash leaves one
+            # complete table with its own count
+            table = target + ".freq.parquet"
+            fresh, stale = table + ".new", table + ".old"
+            shutil.rmtree(fresh, ignore_errors=True)
+            state.frequencies.write.parquet(fresh)
+            # Spark's file listing skips names starting with "_"
+            with open(os.path.join(fresh, _NUM_ROWS), "w") as f:
+                json.dump(state.num_rows, f)
+            if os.path.exists(table):
+                shutil.rmtree(stale, ignore_errors=True)
+                os.rename(table, stale)
+            os.rename(fresh, table)
+            self._write_json(target, {"stateType": "FrequenciesAndNumRows"})
+            shutil.rmtree(stale, ignore_errors=True)
             return
         from .analyzers.kll import KLLState
         if isinstance(state, KLLState):
@@ -142,8 +171,13 @@ class FileSystemStateProvider(StateProvider):
                        **dataclasses.asdict(state)}
         else:
             raise ValueError(f"Cannot persist state {type(state).__name__}")
-        with open(target + ".json", "w") as f:
+        self._write_json(target, payload)
+
+    @staticmethod
+    def _write_json(target: str, payload: Dict[str, Any]) -> None:
+        with open(target + ".json.tmp", "w") as f:
             json.dump(payload, f)
+        os.replace(target + ".json.tmp", target + ".json")
 
     def load(self, analyzer: Analyzer) -> Optional[State]:
         target = self._file_for(analyzer)
@@ -157,7 +191,14 @@ class FileSystemStateProvider(StateProvider):
             spark = self.spark or SparkSession.getActiveSession()
             if spark is None:
                 raise RuntimeError("need a SparkSession to load frequency state")
-            freq = spark.read.parquet(target + ".freq.parquet")
+            table = target + ".freq.parquet"
+            if not os.path.exists(table):
+                table += ".old"  # a persist was cut between its renames
+            num_rows = os.path.join(table, _NUM_ROWS)
+            if os.path.exists(num_rows):  # else written before it moved in
+                with open(num_rows) as f:
+                    payload["numRows"] = json.load(f)
+            freq = spark.read.parquet(table)
             return G.FrequenciesAndNumRows(freq, payload["numRows"])
         if stype == "KLLState":
             import pickle

@@ -93,7 +93,7 @@ class StreamingVerification:
         # cumulative merge below reads the cache instead of re-running
         # the batch's groupBy shuffle (r12: the shuffle ran twice per
         # micro-batch — once for batch metrics, once inside the merge
-        # checkpoint); _release_batch_states drops the cache afterward.
+        # checkpoint); batch_states.unpersist() drops the cache afterward.
         batch_ctx = do_analysis_run(batch_df, self.analyzers,
                                     save_states_with=batch_states,
                                     keep_state_cache=True)
@@ -106,7 +106,7 @@ class StreamingVerification:
             # the batch context IS the result — no recompute needed;
             # cumulative mode releases batch caches inside the merge
             ctx = batch_ctx
-            self._release_batch_states(batch_states)
+            batch_states.unpersist()
 
         check_results = {c: c.evaluate(ctx.metric_map) for c in self.checks}
         order = {CheckStatus.SUCCESS: 0, CheckStatus.WARNING: 1,
@@ -166,18 +166,6 @@ class StreamingVerification:
                 except Exception:  # noqa: BLE001 — best effort only
                     pass
             self._cumulative.persist(a, merged)
-
-    @staticmethod
-    def _release_batch_states(batch_states: InMemoryStateProvider):
-        """Drop the per-batch frequency caches kept alive by
-        keep_state_cache once their metrics and merges are done."""
-        for st in getattr(batch_states, "_states", {}).values():
-            freq = getattr(st, "frequencies", None)
-            if freq is not None:
-                try:
-                    freq.unpersist()
-                except Exception:  # noqa: BLE001 — best effort only
-                    pass
 
     # -- results ----------------------------------------------------------
 

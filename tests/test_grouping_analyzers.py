@@ -84,6 +84,32 @@ class TestMutualInformation:
         df = spark.createDataFrame(rows, "x string, y string")
         assert value(MutualInformation(("x", "y")), df) == pytest.approx(0.0, abs=1e-9)
 
+    def test_partial_nulls_pinned_without_broadcast(self, spark):
+        """Nulls in both columns: a row with one null key still counts
+        toward the other key's marginal but not toward the sum (the
+        reference's inner-join semantics, which can make MI negative).
+        Value pinned to the earlier broadcast-join form; the marginals
+        are window sums, so no plan broadcasts anything."""
+        rows = [(None if i % 11 == 0 else i % 7,
+                 None if i % 13 == 0 else f"v{(i * 3 + i // 7) % 5}")
+                for i in range(500)]
+        df = spark.createDataFrame(rows, "a int, b string")
+        store = spark._jsparkSession.sharedState().statusStore()
+        executions = store.executionsList()
+        seen = (executions.apply(executions.size() - 1).executionId()
+                if executions.size() else -1)
+        mi = value(MutualInformation(("a", "b")), df)
+        assert mi == pytest.approx(-0.00448613004679525, rel=1e-9)
+        # the store keeps a bounded window of executions, newest last
+        executions = store.executionsList()
+        plans = []
+        for i in reversed(range(executions.size())):
+            execution = executions.apply(i)
+            if execution.executionId() <= seen:
+                break
+            plans.append(execution.physicalPlanDescription())
+        assert plans and not any("BroadcastExchange" in p for p in plans)
+
 
 class TestHistogram:
     def test_values(self, df_full):

@@ -7,6 +7,7 @@ stay minimal, and joins pick the intended strategy.
 """
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from deequ_spark import (Completeness, Maximum, Mean, Minimum, Size,
                          do_analysis_run)
@@ -67,10 +68,84 @@ def test_fused_scan_single_exchange(lineitem):
 
 def test_grouping_plan_single_shuffle(spark, lineitem):
     """The shared frequency table = ONE shuffle on the grouping columns."""
-    from deequ_spark.analyzers.grouping import frequencies_plan
-    freq = frequencies_plan(lineitem, ["l_returnflag"], None)
+    from deequ_spark.analyzers.grouping import (exclude_all_null_groups,
+                                                frequencies_plan_all)
+    freq = exclude_all_null_groups(
+        frequencies_plan_all(lineitem, ["l_returnflag"]), ["l_returnflag"])
     plan = explain_str(freq)
     assert count_nodes(plan, "Exchange") == 1
+
+
+def _executed_stages(spark, run):
+    """Run ``run()`` in its own job group; return the completed stages of
+    its jobs as (id, reads the parquet scan, shuffle bytes written)."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"plan-shape-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store, tracker = sc._jsc.sc().statusStore(), sc.statusTracker()
+
+    def items(seq):            # a Scala collection, through py4j
+        it = seq.iterator()
+        while it.hasNext():
+            yield it.next()
+
+    def node_names(cluster):
+        names = [n.name() for n in items(cluster.childNodes())]
+        for child in items(cluster.childClusters()):
+            names += node_names(child)
+        return names
+    stages = {}
+    for job in tracker.getJobIdsForGroup(group):
+        for s in tracker.getJobInfo(job).stageIds:
+            try:
+                stage = store.lastStageAttempt(s)
+            except Py4JJavaError:
+                continue        # listed by the job, skipped: never attempted
+            if stage.status().toString() == "COMPLETE":
+                stages[s] = ("FileScanRDD" in node_names(
+                    store.operationGraphForStage(s).rootCluster()),
+                    stage.shuffleWriteBytes())
+    return [(s, *stages[s]) for s in sorted(stages)]
+
+
+@pytest.mark.parametrize("save", [False, True])
+def test_frequency_group_single_exchange_over_scan(spark, lineitem, save):
+    """[Histogram, Entropy, Uniqueness] on one column share one GROUP BY:
+    across every job of the run, exactly one executed stage reads the
+    parquet scan, and it writes the one shuffle — with and without a
+    state provider."""
+    from deequ_spark import (Entropy, Histogram, InMemoryStateProvider,
+                             Uniqueness)
+    out = {}
+    stages = _executed_stages(spark, lambda: out.setdefault(
+        "ctx", do_analysis_run(
+            lineitem, [Histogram("l_returnflag"), Entropy("l_returnflag"),
+                       Uniqueness(("l_returnflag",))],
+            save_states_with=InMemoryStateProvider() if save else None)))
+    assert all(m.is_success for m in out["ctx"].metric_map.values())
+    scans = [(s, written) for s, scan, written in stages if scan]
+    assert len(scans) == 1 and scans[0][1] > 0, stages
+
+
+def test_lone_histogram_runs_its_standalone_shuffles(spark, lineitem):
+    """A Histogram with no grouping analyzer on its column runs the
+    shuffles of its own string GROUP BY, no more: the runner does not
+    regroup a raw frequency table for it."""
+    from deequ_spark import Histogram
+    h = Histogram("l_returnflag")
+
+    def shuffles(run):
+        return sum(1 for _, _, written in _executed_stages(spark, run)
+                   if written > 0)
+    alone = shuffles(lambda: h.calculate(lineitem))
+    assert alone >= 1
+    assert shuffles(lambda: do_analysis_run(lineitem, [h])) == alone
 
 
 def test_knn_join_never_shuffles_scored_cross_product(spark):

@@ -321,29 +321,51 @@ class TestConcurrentGroups:
         assert len(jobs) >= 5, jobs
 
 
+def _same_value(got, expected):
+    """Exact for distributions and counts; a float sum may differ in its
+    last bits with the order the partitions are added in."""
+    if isinstance(expected, float):
+        return got == pytest.approx(expected, rel=1e-12)
+    return got == expected
+
+
+def _corpus_passes(spark, rows, schema, run):
+    """Corpus passes of ``run(df)`` — partitions of the base data computed,
+    over its partition count — with the runner's groups run one at a
+    time; returns (passes, run's result)."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(it):
+        acc.add(1)
+        return it
+    base = spark.createDataFrame(rows, schema)
+    n_parts = base.rdd.getNumPartitions()
+    counted = spark.createDataFrame(base.rdd.mapPartitions(tick), schema)
+    prev = spark.conf.get("spark.deequ.runner.maxConcurrentGroups", None)
+    spark.conf.set("spark.deequ.runner.maxConcurrentGroups", "1")
+    try:
+        out = run(counted)
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.deequ.runner.maxConcurrentGroups")
+        else:
+            spark.conf.set("spark.deequ.runner.maxConcurrentGroups", prev)
+    assert acc.value % n_parts == 0
+    return acc.value // n_parts, out
+
+
 class TestHistogramShuffleShare:
-    """r13 (guide §2.4): a standalone Histogram sharing (column, where)
-    with a grouping bucket rides the bucket's shuffle — one corpus
-    groupBy (null-inclusive, persisted) serves the bucket's analyzers
-    (all-null group excluded post-shuffle) and the Histogram (string-
-    cast re-aggregation post-shuffle). Values, metric-map order and the
-    saved-state path must be byte-identical to the unshared run."""
+    """A Histogram on a plain non-float column joins the frequency group
+    of its (column, where): one null-inclusive corpus GROUP BY serves the
+    grouping analyzers (all-null group excluded post-shuffle) and the
+    Histogram (string-cast regrouping post-shuffle). Values and saved
+    states must equal each analyzer run alone."""
 
-    KNOB = "spark.deequ.runner.shareHistogramShuffle"
-
-    def _run(self, spark, df, analyzers, share):
-        spark.conf.set(self.KNOB, "true" if share else "false")
-        try:
-            return do_analysis_run(df, analyzers)
-        finally:
-            spark.conf.unset(self.KNOB)
-
-    def _assert_identical(self, spark, df, analyzers):
-        shared = self._run(spark, df, analyzers, True)
-        plain = self._run(spark, df, analyzers, False)
-        assert list(shared.metric_map.keys()) == list(plain.metric_map.keys())
+    def _assert_identical(self, df, analyzers):
+        shared = do_analysis_run(df, analyzers)
         for a in analyzers:
-            ms, mp = shared.metric_map[a], plain.metric_map[a]
+            ms = shared.metric_map[a]
+            (mp,) = do_analysis_run(df, [a]).metric_map.values()
             assert ms.is_success and mp.is_success, (a, ms, mp)
             vs = getattr(ms.value, "values", ms.value)
             vp = getattr(mp.value, "values", mp.value)
@@ -351,79 +373,133 @@ class TestHistogramShuffleShare:
             if hasattr(ms.value, "number_of_bins"):
                 assert ms.value.number_of_bins == mp.value.number_of_bins
                 assert ms.value.tail_count == mp.value.tail_count
+                # and the Histogram's own string GROUP BY agrees
+                assert ms.value == a.calculate(df).value
+        return shared
 
     def test_string_column_with_nulls_identical(self, spark, df_missing):
-        """NULL rows: excluded from the bucket analyzers, a NullValue
-        bin for the Histogram — both derived from ONE shuffle."""
+        """NULL rows: excluded from the grouping analyzers, a NullValue
+        bin for the Histogram — both derived from ONE shuffle. Metric
+        order: grouping analyzers first, Histograms in the standalone
+        slot."""
         from deequ_spark import Histogram
-        self._assert_identical(spark, df_missing, [
-            Histogram("att1"), Entropy("att1"), Uniqueness(("att1",)),
-            Distinctness(("att1",)), CountDistinct(("att1",))])
+        analyzers = [Histogram("att1"), Entropy("att1"),
+                     Uniqueness(("att1",)), Distinctness(("att1",)),
+                     CountDistinct(("att1",))]
+        shared = self._assert_identical(df_missing, analyzers)
+        assert list(shared.metric_map) == analyzers[1:] + analyzers[:1]
 
     def test_int_column_and_where_filter_identical(self, spark, df_numeric):
         from deequ_spark import Histogram
-        self._assert_identical(spark, df_numeric, [
+        self._assert_identical(df_numeric, [
             Histogram("att2", where="att1 > 1"),
             Entropy("att2", where="att1 > 1"),
             # different where -> must NOT pair with the filtered bucket
             Histogram("att2")])
 
     def test_double_column_never_shares(self, spark):
-        """float/double are excluded from sharing: groupBy normalizes
-        -0.0 to 0.0 (and NaN bit patterns) BEFORE any cast, while the
-        Histogram's corpus-level string groupBy distinguishes "-0.0" —
-        the guard keeps the reference semantics bit-exact."""
+        """float/double stay standalone: groupBy normalizes -0.0 to 0.0
+        (and NaN bit patterns) BEFORE any cast, also inside an array,
+        while the Histogram's corpus-level string groupBy distinguishes
+        "-0.0" — the guard keeps the reference semantics bit-exact."""
         from deequ_spark import Histogram
         df = spark.createDataFrame(
-            [(1, -0.0), (2, 0.0), (3, 1.5)], "id int, v double")
-        shared = self._run(spark, df, [Histogram("v"), Entropy("v")], True)
-        plain = self._run(spark, df, [Histogram("v"), Entropy("v")], False)
-        hist_s = [m for a, m in shared.metric_map.items()
-                  if a.name == "Histogram"][0]
-        hist_p = [m for a, m in plain.metric_map.items()
-                  if a.name == "Histogram"][0]
-        assert hist_s.value.values == hist_p.value.values
-        assert "-0.0" in hist_s.value.values      # corpus-level cast kept
+            [(1, -0.0, [-0.0, 1.0]), (2, 0.0, [0.0, 1.0]), (3, 1.5, None)],
+            "id int, v double, w array<double>")
+        self._assert_identical(df, [Histogram("v"), Entropy("v")])
+        ctx = do_analysis_run(df, [Histogram("v"), Entropy("v")])
+        assert "-0.0" in ctx.metric_map[Histogram("v")].value.values
+        hists = [Histogram("w"), Histogram("w", max_detail_bins=5)]
+        self._assert_identical(df, hists)
+        ctx = do_analysis_run(df, hists)
+        assert ctx.metric_map[hists[0]].value.number_of_bins == 3
 
     def test_shared_run_scans_the_corpus_fewer_times(self, spark):
-        """Structural pin: with sharing the whole [Histogram, Entropy]
-        run reads the base data ONCE (persisted inclusive table);
-        without it the bucket scans once and the histogram's two lazy
-        post-state jobs scan twice more."""
-        from deequ_spark import Histogram
-        schema = "item string, att1 string"
+        """[Histogram, Entropy] on one column reads the base data ONCE,
+        with and without a state provider: each standalone would read
+        it once more."""
+        from deequ_spark import Histogram, InMemoryStateProvider
         rows = [(str(i), "abc"[i % 3]) for i in range(30)]
-
-        def passes(share):
-            acc = spark.sparkContext.accumulator(0)
-
-            def tick(it):
-                acc.add(1)
-                return it
-            base = spark.createDataFrame(rows, schema)
-            n_parts = base.rdd.getNumPartitions()
-            counted = spark.createDataFrame(
-                base.rdd.mapPartitions(tick), schema)
-            prev = spark.conf.get("spark.deequ.runner.maxConcurrentGroups",
-                                  None)
-            spark.conf.set("spark.deequ.runner.maxConcurrentGroups", "1")
-            try:
-                ctx = self._run(spark, counted,
-                                [Histogram("att1"), Entropy("att1")], share)
-            finally:
-                if prev is None:
-                    spark.conf.unset("spark.deequ.runner.maxConcurrentGroups")
-                else:
-                    spark.conf.set("spark.deequ.runner.maxConcurrentGroups",
-                                   prev)
+        for states in (None, InMemoryStateProvider()):
+            n, ctx = _corpus_passes(
+                spark, rows, "item string, att1 string",
+                lambda df: do_analysis_run(
+                    df, [Histogram("att1"), Entropy("att1")],
+                    save_states_with=states))
             assert all(m.is_success for m in ctx.metric_map.values())
-            assert acc.value % n_parts == 0
-            return acc.value // n_parts
+            assert n == 1, (states, n)
 
-        shared_passes = passes(True)
-        plain_passes = passes(False)
-        assert shared_passes == 1, shared_passes
-        assert plain_passes >= 2, plain_passes
+    def test_two_histograms_without_bucket_one_pass(self, spark):
+        from deequ_spark import Histogram
+        rows = [(str(i), "abc"[i % 3] if i % 4 else None)
+                for i in range(30)]
+        hists = [Histogram("att1"), Histogram("att1", max_detail_bins=2)]
+        n, ctx = _corpus_passes(spark, rows, "item string, att1 string",
+                                lambda df: do_analysis_run(df, hists))
+        assert n == 1, n
+        assert list(ctx.metric_map) == hists
+        for h in hists:
+            alone = h.calculate(spark.createDataFrame(
+                rows, "item string, att1 string")).value
+            assert ctx.metric_map[h].value == alone
+
+    def test_shared_states_equal_standalone_and_merge(self, spark,
+                                                      df_missing):
+        """Saved Histogram states are schema- and row-identical to
+        Histogram.compute_state_from; merged over two deltas they give
+        the one-shot metrics."""
+        from deequ_spark import (Histogram, InMemoryStateProvider,
+                                 run_on_aggregated_states)
+        analyzers = [Histogram("att1"), Entropy("att1"),
+                     Uniqueness(("att1",))]
+        hist = analyzers[0]
+        left = df_missing.where("CAST(item AS INT) <= 6")
+        right = df_missing.where("CAST(item AS INT) > 6")
+        providers = []
+        for part in (left, right):
+            prov = InMemoryStateProvider()
+            do_analysis_run(part, analyzers, save_states_with=prov)
+            saved = prov.load(hist).frequencies
+            alone = hist.compute_state_from(part).frequencies
+            assert saved.schema == alone.schema
+            assert sorted(saved.collect()) == sorted(alone.collect())
+            providers.append(prov)
+        merged = run_on_aggregated_states(df_missing, analyzers, providers)
+        oneshot = do_analysis_run(df_missing, analyzers)
+        for a in analyzers:
+            assert _same_value(merged.metric_map[a].value,
+                               oneshot.metric_map[a].value)
+
+    @pytest.mark.parametrize("mode", ["batch", "cumulative"])
+    def test_streaming_frequency_group_releases_storage(self, spark, mode):
+        """keep_state_cache: the only caches a frequency group keeps are
+        the frequencies of its saved states, and the streaming verifier
+        releases those — storage returns to its baseline."""
+        from deequ_spark import Histogram
+        from deequ_spark.storage import release_checkpoint
+        from deequ_spark.streaming import StreamingVerification
+
+        def stored():
+            return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+        analyzers = [Histogram("g"), Entropy("g")]
+        batches = [spark.createDataFrame(
+            [(i, f"g{(i * b) % 5}" if i % 6 else None) for i in range(40)],
+            "id int, g string") for b in (1, 2, 3)]
+        baseline = stored()
+        sv = StreamingVerification(analyzers=analyzers, mode=mode)
+        for i, batch in enumerate(batches):
+            sv.foreach_batch(batch, i)
+        last = sv.results[-1].context
+        assert all(m.is_success for m in last.metric_map.values())
+        if mode == "cumulative":
+            union = batches[0].union(batches[1]).union(batches[2])
+            expected = do_analysis_run(union, analyzers)
+            for a in analyzers:
+                assert _same_value(last.metric_map[a].value,
+                                   expected.metric_map[a].value)
+            for a in analyzers:
+                release_checkpoint(sv.cumulative_states().load(a).frequencies)
+        assert stored() == baseline
 
 
 def test_standalone_histogram_single_corpus_pass(spark):

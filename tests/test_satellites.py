@@ -1312,6 +1312,66 @@ class TestAdviceR6Fixes:
                               save_states_with=prov)
         (metric,) = ctx.metric_map.values()
         assert metric.value == 6.0
+        # frequency states: the merged table is a lazy plan over the very
+        # table its persist replaces — still equal to a one-shot run
+        from deequ_spark import Entropy, Histogram
+        freq = [Uniqueness(("v",)), Histogram("v"), Entropy("v")]
+        days = [d1, d2, d3.union(spark.createDataFrame(
+            [(1,), (None,)], "v int"))]
+        prov = FileSystemStateProvider(str(tmp_path / "freq"), spark=spark,
+                                       allow_overwrite=True)
+        do_analysis_run(days[0], freq, save_states_with=prov)
+        for day in days[1:]:
+            ctx = do_analysis_run(day, freq, aggregate_with=prov,
+                                  save_states_with=prov)
+        whole = days[0].union(days[1]).union(days[2])
+        oneshot = do_analysis_run(whole, freq)
+        for a in freq:
+            assert ctx.metric_map[a].is_success, ctx.metric_map[a]
+            expected = oneshot.metric_map[a].value
+            if isinstance(expected, float):
+                expected = pytest.approx(expected, rel=1e-12)
+            assert ctx.metric_map[a].value == expected
+
+    def test_frequency_state_swap_leaves_one_table(self, tmp_path, spark):
+        """A frequency state is written beside the live table, its row
+        count inside it, and swapped in: no temp table is left behind; a
+        persist cut after the swap loads the new table with its own count;
+        a persist cut between its two renames leaves the previous table
+        aside, which load reads without moving any file."""
+        import os
+        import shutil
+        a = Uniqueness(("v",))
+        prov = FileSystemStateProvider(str(tmp_path), spark=spark,
+                                       allow_overwrite=True)
+        d1 = spark.createDataFrame([(1,), (2,), (2,)], "v int")
+        do_analysis_run(d1, [a], save_states_with=prov)
+        ctx = do_analysis_run(d1, [a], aggregate_with=prov,
+                              save_states_with=prov)
+        assert ctx.metric_map[a].value == 0.0
+        table = prov._file_for(a) + ".freq.parquet"
+        assert sorted(os.listdir(tmp_path)) == sorted(
+            [os.path.basename(table), os.path.basename(prov._file_for(a))
+             + ".json"])
+
+        def cut(*args):
+            raise OSError("cut")
+        prov._write_json = cut
+        with pytest.raises(OSError):
+            prov.persist(a, prov.load(a).merge(prov.load(a)))
+        assert prov.load(a).num_rows == 12
+        # cut between the renames: only the previous table, aside
+        shutil.rmtree(table)
+        listing = sorted(os.listdir(tmp_path))
+        state = prov.load(a)
+        assert state.num_rows == 6
+        assert a.compute_metric_from_state(state).value == 0.0
+        assert sorted(os.listdir(tmp_path)) == listing
+        # the earlier layout: the count in the JSON file, not the table
+        os.remove(os.path.join(table + ".old", "_num_rows.json"))
+        with open(prov._file_for(a) + ".json", "w") as f:
+            f.write('{"stateType": "FrequenciesAndNumRows", "numRows": 6}')
+        assert prov.load(a).num_rows == 6
 
     def test_anomaly_history_non_numeric_becomes_missing(self, spark):
         """ADVICE r6 #4: a successful non-numeric historic metric (e.g. a

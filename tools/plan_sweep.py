@@ -90,9 +90,11 @@ def build_plans(spark):
     # --- b2: grouping frequencies + fused second stage ---
     from deequ_spark import (CountDistinct, Distinctness, Entropy,
                              Uniqueness)
-    from deequ_spark.analyzers.grouping import frequencies_plan
-    freq = frequencies_plan(orders, ["o_custkey"], None)
-    from deequ_spark.analyzers.grouping import COUNT_COL
+    from deequ_spark.analyzers.grouping import (COUNT_COL,
+                                                exclude_all_null_groups,
+                                                frequencies_plan_all)
+    freq = exclude_all_null_groups(
+        frequencies_plan_all(orders, ["o_custkey"]), ["o_custkey"])
     aggs2 = [F.sum(F.col(COUNT_COL)).cast("long")]
     for a in [Uniqueness(("o_custkey",)), Entropy("o_custkey"),
               Distinctness(("o_custkey",)), CountDistinct(("o_custkey",))]:
