@@ -30,7 +30,9 @@ import pandas
 from pyspark.errors import PySparkValueError
 from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
+from .. import storage
 from ..metrics import (Distribution, DistributionValue, DoubleMetric, Entity,
                        HistogramMetric, Metric)
 from .base import (Analyzer, EmptyStateError, State, has_column,
@@ -600,58 +602,56 @@ class Histogram(FrequencyBasedAnalyzer):
     def compute_metric_from_state(self, state: Optional[FrequenciesAndNumRows]) -> Metric:
         if state is None:
             return self.to_failure_metric(EmptyStateError("Empty state"))
-        cached = None
         try:
-            # the metric needs TWO jobs over the frequency table (the
-            # stats agg and the top-N collect); with a LAZY state plan
-            # each job re-ran the corpus groupBy — persist the (tiny,
-            # post-shuffle) table across them so the corpus is scanned
-            # once, released below (r13, guide §2.4/§5; halves the
-            # profiler's pass-3 corpus scans)
-            from pyspark.storagelevel import StorageLevel
-            freqs = state.frequencies
-            if not freqs.storageLevel.useMemory \
-                    and not freqs.storageLevel.useDisk:
-                cached = freqs.persist(StorageLevel.MEMORY_AND_DISK)
-                freqs = cached
-            # one job recovers both the bin count and (if still lazy) the
-            # frequency-table total — the reference derives numRows in the
-            # same pass family; a separate count() here would be an extra
-            # post-shuffle job per histogram
-            stats = (freqs
-                     .agg(F.count(F.lit(1)).alias("__n_bins"),
-                          F.sum(COUNT_COL).alias("__num_rows"))
-                     .collect()[0])
-            n_bins = int(stats["__n_bins"])
-            if state._num_rows is None:
-                state._num_rows = int(stats["__num_rows"] or 0)
-            # descending frequency, ties broken by value ascending
-            # (Histogram.scala:112-115)
-            top = (freqs
-                   .orderBy(F.desc(COUNT_COL), _col(self._plain_column).asc())
-                   .limit(self.max_detail_bins)
-                   .collect())
-            total = max(state.num_rows, 1)
-            values = {}
-            covered = 0
-            for row in top:
-                key = row[self._plain_column]
-                absolute = int(row[COUNT_COL])
-                covered += absolute
-                # with ratios disabled the reference divides by a total of
-                # 1, i.e. ratio == absolute (Histogram.scala:77-81)
-                ratio = (absolute / total
-                         if self.compute_frequencies_as_ratio
-                         else float(absolute))
-                values[key] = DistributionValue(absolute, ratio)
-            dist = Distribution(values, number_of_bins=n_bins,
-                                tail_count=state.num_rows - covered)
-            return HistogramMetric(Entity.COLUMN, self.name, self.column, dist)
+            with storage.scope() as s:
+                # the metric needs TWO jobs over the frequency table (the
+                # stats agg and the top-N collect); with a LAZY state
+                # plan each job re-ran the corpus groupBy — persist the
+                # (tiny, post-shuffle) table across them so the corpus
+                # is scanned once (r13, guide §2.4/§5; halves the
+                # profiler's pass-3 corpus scans); a table cached
+                # upstream is read as is
+                freqs = s.persist(state.frequencies,
+                                  StorageLevel.MEMORY_AND_DISK)
+                # one job recovers both the bin count and (if still
+                # lazy) the frequency-table total — the reference
+                # derives numRows in the same pass family; a separate
+                # count() here would be an extra post-shuffle job per
+                # histogram
+                stats = (freqs
+                         .agg(F.count(F.lit(1)).alias("__n_bins"),
+                              F.sum(COUNT_COL).alias("__num_rows"))
+                         .collect()[0])
+                n_bins = int(stats["__n_bins"])
+                if state._num_rows is None:
+                    state._num_rows = int(stats["__num_rows"] or 0)
+                # descending frequency, ties broken by value ascending
+                # (Histogram.scala:112-115)
+                top = (freqs
+                       .orderBy(F.desc(COUNT_COL),
+                                _col(self._plain_column).asc())
+                       .limit(self.max_detail_bins)
+                       .collect())
+                total = max(state.num_rows, 1)
+                values = {}
+                covered = 0
+                for row in top:
+                    key = row[self._plain_column]
+                    absolute = int(row[COUNT_COL])
+                    covered += absolute
+                    # with ratios disabled the reference divides by a
+                    # total of 1, i.e. ratio == absolute
+                    # (Histogram.scala:77-81)
+                    ratio = (absolute / total
+                             if self.compute_frequencies_as_ratio
+                             else float(absolute))
+                    values[key] = DistributionValue(absolute, ratio)
+                dist = Distribution(values, number_of_bins=n_bins,
+                                    tail_count=state.num_rows - covered)
+                return HistogramMetric(Entity.COLUMN, self.name,
+                                       self.column, dist)
         except Exception as exc:  # noqa: BLE001
             return self.to_failure_metric(exc)
-        finally:
-            if cached is not None:
-                cached.unpersist()
 
 
 @dataclass(frozen=True, eq=False)

@@ -56,6 +56,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import storage
+
 # residue-space double hashing keeps every intermediate far below 2^62
 # (ANSI mode throws on long overflow): terms are < m ≤ 2^24, i ≤ 64
 _MAX_BITS_DEFAULT = 1 << 23          # 1 MB of plan literal
@@ -181,18 +183,16 @@ def build_bloom(df: DataFrame, key_col: str,
         if m % _BLOCK_BITS or m <= 0:
             raise ValueError(f"pinned m={m} is not a positive multiple "
                              f"of {_BLOCK_BITS}")
-    cached = None
-    try:
+    with storage.scope() as s:
         if expected_items is None:
             # the sizing count must run before the geometry is known, so
             # an unknown n costs a second pass over the key column (guide
             # §3.2: "the small side is scanned twice"); persist the
             # projected keys across count + build so the source subtree
             # (scan, filters, upstream joins) executes once — released
-            # in the finally below even if a build job fails
-            cached = df.persist()
-            expected_items = cached.count()
-            df = cached
+            # with the scope even if a build job fails
+            df = s.persist(df)
+            expected_items = df.count()
         if shape is None:
             m, k = bloom_shape(expected_items, fpp, max_bits)
         n_words = m // _BLOCK_BITS
@@ -208,9 +208,6 @@ def build_bloom(df: DataFrame, key_col: str,
                      .alias("mask"))
                  .groupBy("w").agg(F.bit_or("mask").alias("bits"))
                  .collect())
-    finally:
-        if cached is not None:
-            cached.unpersist()
     dense = [0] * n_words
     for r in words:
         dense[int(r["w"])] = int(r["bits"])

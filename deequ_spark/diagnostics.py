@@ -25,6 +25,8 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import storage
+
 
 def key_skew_report(df: DataFrame, key_cols: Union[str, Sequence[str]],
                     top_n: int = 10) -> dict:
@@ -60,8 +62,8 @@ def key_skew_report(df: DataFrame, key_cols: Union[str, Sequence[str]],
     counts = (df.select(key_str.alias("__key"),
                         null_any.cast("long").alias("__null"))
               .groupBy("__key", "__null").count())
-    counts = counts.persist()
-    try:
+    with storage.scope() as s:
+        counts = s.persist(counts)
         summary = counts.agg(
             F.sum("count").alias("n_rows"),
             F.count("*").alias("n_keys"),
@@ -72,8 +74,6 @@ def key_skew_report(df: DataFrame, key_cols: Union[str, Sequence[str]],
         ).collect()[0]
         top = (counts.orderBy(F.desc("count"), F.asc("__key"))
                .limit(top_n).collect())
-    finally:
-        counts.unpersist()
 
     n_rows = int(summary["n_rows"] or 0)
     if int(summary["n_keys"]) == 0:
@@ -294,14 +294,12 @@ def join_cardinality(left: DataFrame, left_keys,
         .withColumnRenamed("count", "__cr")
     prod = lc.join(rc, "__k").withColumn(
         "__contrib", F.col("__cl") * F.col("__cr"))
-    prod = prod.persist()
-    try:
+    with storage.scope() as s:
+        prod = s.persist(prod)
         tot = prod.agg(F.sum("__contrib").alias("rows"),
                        F.count(F.lit(1)).alias("keys")).collect()[0]
         top = (prod.orderBy(F.desc("__contrib"), F.asc("__k"))
                .limit(top_n).collect())
-    finally:
-        prod.unpersist()
     return {"rows": int(tot["rows"] or 0),
             "matching_keys": int(tot["keys"]),
             "top_keys": [(r["__k"], int(r["__contrib"])) for r in top]}
@@ -327,8 +325,8 @@ def fd_violations(df: DataFrame, determinant, dependent,
     per_key = (df.groupBy(key_str.alias("__k"))
                .agg(F.countDistinct(dep_val).alias("__d"),
                     F.count(F.lit(1)).alias("__n")))
-    per_key = per_key.persist()
-    try:
+    with storage.scope() as s:
+        per_key = s.persist(per_key)
         tot = per_key.agg(
             F.count(F.lit(1)).alias("keys"),
             F.sum((F.col("__d") > 1).cast("long")).alias("bad_keys"),
@@ -338,8 +336,6 @@ def fd_violations(df: DataFrame, determinant, dependent,
         top = (per_key.where(F.col("__d") > 1)
                .orderBy(F.desc("__d"), F.desc("__n"), F.asc("__k"))
                .limit(top_n).collect())
-    finally:
-        per_key.unpersist()
     rows = int(tot["rows"] or 0)
     bad_rows = int(tot["bad_rows"] or 0)
     return {"keys": int(tot["keys"]),

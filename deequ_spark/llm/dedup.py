@@ -18,12 +18,15 @@ giving uniform fan-out for ~uniform shingle distributions.
 
 from __future__ import annotations
 
+import uuid
 from typing import List, Optional, Sequence
 
 import pandas
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .. import storage
 
 
 def ensure_parallelism(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
@@ -148,8 +151,7 @@ def _nonblank(df: DataFrame, text_col: str) -> DataFrame:
 _LAMBDA_SEGMENT = 16
 
 
-def _lambda_barrier(base: DataFrame, expr, step: int,
-                    col: str = "__seg"):
+def _lambda_barrier(base: DataFrame, expr, step: int, col: str):
     """Break a long nested-lambda chain with a projection barrier every
     ``_LAMBDA_SEGMENT`` steps. The analyzer binds ONE lambda nesting
     level per resolution iteration, so a 49-deep zip_with chain sits at
@@ -176,7 +178,9 @@ def duplicate_span_removal(df: DataFrame, id_col: str, text_col: str,
     the rebuilt text is single-space joined (whitespace-normalizing).
 
     Returns the input plus ``out_col``, ``n_tokens`` and
-    ``n_removed_tokens``.
+    ``n_removed_tokens``. Ids must be non-null: a row with a NULL id is
+    dropped from the output, and its windows do not count toward
+    repeated windows.
 
     Scale design — the reference algorithm builds a corpus-wide suffix
     array; the Spark-first equivalent is a window-keyed shuffle:
@@ -201,21 +205,27 @@ def duplicate_span_removal(df: DataFrame, id_col: str, text_col: str,
     """
     if key not in ("hash", "text"):
         raise ValueError("key must be 'hash' or 'text'")
+    # temp columns carry a per-call suffix, so a caller's column of the
+    # same name (e.g. `__toks`) passes through untouched
+    uid = uuid.uuid4().hex[:12]
+    c_did, c_toks, c_sz, c_th, c_seg, c_starts, c_pos, c_gram, c_win, c_n = (
+        f"__{name}_{uid}" for name in
+        "did toks sz th seg starts pos gram win n".split())
     toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
     # carry df's columns THROUGH the rebuild (r13): the rebuild used to
     # re-attach them with a third corpus scan + a second join
     # (df ⋈ rebuilt on id) — plans/r13/b17_span_dedup_before.txt shows 3
     # parquet scans / 2 joins. The loser spans travel by id either way,
-    # so keeping the original columns alongside __toks removes that
+    # so keeping the original columns alongside the tokens removes that
     # scan+join outright (guide §2.4). The null-id filter preserves the
     # old inner join's behavior (a NULL id never equals itself).
     base = (df.where(F.col(id_col).isNotNull())
-            .withColumn("__did", F.col(id_col))
-            .withColumn("__toks", toks)
-            .withColumn("__sz", F.size("__toks")))
+            .withColumn(c_did, F.col(id_col))
+            .withColumn(c_toks, toks)
+            .withColumn(c_sz, F.size(c_toks)))
 
     # all n-token window keys in order; NONE for docs shorter than n
-    sz = F.col("__sz")
+    sz = F.col(c_sz)
     if key == "hash":
         # Rolling 62-bit window key over TOKEN hashes — no window text
         # is ever built. Two independent Horner chains over the low/high
@@ -238,13 +248,13 @@ def duplicate_span_removal(df: DataFrame, id_col: str, text_col: str,
             return _pack((a1 * F.lit(b1) + x1) % F.lit(m1),
                          (a2 * F.lit(b2) + x2) % F.lit(m2))
 
-        # __th lives in its OWN projection: embedding the transform
-        # expression inside every per-shift slice would cost the
+        # token hashes live in their OWN projection: embedding the
+        # transform expression inside every per-shift slice would cost the
         # analyzer one resolution round per copy — an attribute
         # reference resolves once
         base = base.withColumn(
-            "__th", F.transform(F.col("__toks"), lambda t: F.xxhash64(t)))
-        th = F.col("__th")
+            c_th, F.transform(F.col(c_toks), lambda t: F.xxhash64(t)))
+        th = F.col(c_th)
         grams = F.transform(
             th, lambda t: _pack(t.bitwiseAND(F.lit(mask)) % F.lit(m1),
                                 F.shiftright(t, 31)
@@ -253,21 +263,21 @@ def duplicate_span_removal(df: DataFrame, id_col: str, text_col: str,
             keep = F.greatest(sz - j, F.lit(0))
             grams = F.zip_with(F.slice(grams, 1, keep),
                                F.slice(th, j + 1, keep), _step)
-            base, grams = _lambda_barrier(base, grams, j)
+            base, grams = _lambda_barrier(base, grams, j, c_seg)
         grams = F.when(sz >= n, grams).otherwise(
             F.array().cast("array<bigint>"))
     else:
-        grams = F.col("__toks")
+        grams = F.col(c_toks)
         for j in range(1, n):
             keep = F.greatest(sz - j, F.lit(0))
             grams = F.zip_with(F.slice(grams, 1, keep),
-                               F.slice(F.col("__toks"), j + 1, keep),
+                               F.slice(F.col(c_toks), j + 1, keep),
                                lambda a, b: F.concat(a, F.lit(" "), b))
-            base, grams = _lambda_barrier(base, grams, j)
+            base, grams = _lambda_barrier(base, grams, j, c_seg)
         grams = F.when(sz >= n, grams).otherwise(
             F.array().cast("array<string>"))
 
-    w = base.select("__did", F.posexplode(grams).alias("__pos", "__gram"))
+    w = base.select(c_did, F.posexplode(grams).alias(c_pos, c_gram))
     # winner + occurrence count as WINDOW functions over the key, not
     # groupBy + join-back: the join's probe side would shuffle `w` a
     # second time AND re-run the whole rolling-hash/explode subplan (the
@@ -276,38 +286,38 @@ def duplicate_span_removal(df: DataFrame, id_col: str, text_col: str,
     # Window keys are near-unique, so map-side combine bought nothing;
     # ONE hash-partition + sort replaces both shuffles.
     from pyspark.sql import Window
-    per_key = Window.partitionBy("__gram")
+    per_key = Window.partitionBy(c_gram)
     marked = w.select(
-        "__did", "__pos",
-        F.min(F.struct(F.col("__did"), F.col("__pos")))
-         .over(per_key).alias("__win"),
-        F.count(F.lit(1)).over(per_key).alias("__c"))
+        c_did, c_pos,
+        F.min(F.struct(F.col(c_did), F.col(c_pos)))
+         .over(per_key).alias(c_win),
+        F.count(F.lit(1)).over(per_key).alias(c_n))
     losers = (marked
-              .where((F.col("__c") >= 2)
-                     & ~((F.col("__win.__did") == F.col("__did"))
-                         & (F.col("__win.__pos") == F.col("__pos"))))
-              .select("__did", "__pos"))
-    spans = (losers.groupBy("__did")
-             .agg(F.sort_array(F.collect_list("__pos")).alias("__starts")))
+              .where((F.col(c_n) >= 2)
+                     & ~((F.col(c_win)[c_did] == F.col(c_did))
+                         & (F.col(c_win)[c_pos] == F.col(c_pos))))
+              .select(c_did, c_pos))
+    spans = (losers.groupBy(c_did)
+             .agg(F.sort_array(F.collect_list(c_pos)).alias(c_starts)))
 
-    return (base.join(spans, "__did", "left")
-            .withColumn("__starts",
-                        F.coalesce(F.col("__starts"),
+    return (base.join(spans, c_did, "left")
+            .withColumn(c_starts,
+                        F.coalesce(F.col(c_starts),
                                    F.array().cast("array<int>")))
             .select(
                 *[F.col(f"`{c}`") for c in df.columns],
                 F.array_join(
                     F.filter(
-                        F.col("__toks"),
+                        F.col(c_toks),
                         lambda t, i: ~F.exists(
-                            F.col("__starts"),
+                            F.col(c_starts),
                             lambda s: (s <= i) & (i < s + F.lit(n)))),
                     " ").alias(out_col),
-                F.col("__sz").cast("long").alias("n_tokens"),
+                F.col(c_sz).cast("long").alias("n_tokens"),
                 F.size(F.filter(
                     F.sequence(F.lit(0), F.greatest(sz - 1, F.lit(0))),
                     lambda i: (sz > 0) & F.exists(
-                        F.col("__starts"),
+                        F.col(c_starts),
                         lambda s: (s <= i) & (i < s + F.lit(n)))))
                 .cast("long").alias("n_removed_tokens")))
 
@@ -532,45 +542,47 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     # candidates feeds BOTH the semi-join filter and the pair join;
     # persist so the signature+banding subplan runs once, not twice
     # (the pair set is tiny — ids only)
-    candidates = candidates.persist()
-    # no .distinct() on the id list: left_semi matches on EXISTENCE, so
-    # duplicate probe ids cost nothing — the distinct was a pure extra
-    # shuffle (r12, guide §2.4)
-    cand_ids = (candidates.select(F.col("id_a").alias("id"))
-                .union(candidates.select(F.col("id_b").alias("id"))))
-    # `shingled` feeds BOTH pair sides (sh_a by id_a, sh_b by id_b);
-    # unpersisted, the semi-join + shingle pass planned and EXECUTED
-    # twice (plans/r12/b6_lsh_verify_cached_before.txt: two full copies
-    # of the docs-scan + shingle subtree, ReusedExchange 0 — the two
-    # joins key on different attributes so exchange reuse never
-    # matches). Persist halves the candidate-doc shingle pass and the
-    # cand_ids broadcast build (after-capture: one docs shingle scan +
-    # one broadcast; r12 wave 2, guide §2.4: measured 3.07 -> 2.32 s
-    # interleaved medians at sf0.1, row-identical; at 100 TB this
-    # halves the verify stage's dominant pass). Released below with
-    # `candidates`.
-    shingled = (df.join(cand_ids, df[id_col] == cand_ids["id"], "left_semi")
-                .select(F.col(id_col).alias("id"),
-                        _shingle_fn(shingles)(F.col(text_col), shingle_n)
-                        .alias("sh"))
-                .persist())
-    sa = shingled.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = shingled.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    verified = (candidates.join(sa, "id_a").join(sb, "id_b")
-                .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-                .withColumn("jaccard", F.col("inter") /
-                            (F.size("sh_a") + F.size("sh_b") - F.col("inter")))
-                .where(F.col("jaccard") >= threshold)
-                .select("id_a", "id_b", "jaccard"))
-    # the cache-manager entries for `candidates`/`shingled` are never
-    # GC-reclaimed, so a long-lived session calling this repeatedly
-    # would accumulate cached blocks; materialize the (tiny) verified
-    # pair set eagerly — its localCheckpoint blocks ARE
-    # ContextCleaner-managed — and release both caches before returning
-    verified = verified.localCheckpoint(eager=True)
-    candidates.unpersist()
-    shingled.unpersist()
-    return verified
+    with storage.scope() as s:
+        candidates = s.persist(candidates)
+        # no .distinct() on the id list: left_semi matches on EXISTENCE,
+        # so duplicate probe ids cost nothing — the distinct was a pure
+        # extra shuffle (r12, guide §2.4)
+        cand_ids = (candidates.select(F.col("id_a").alias("id"))
+                    .union(candidates.select(F.col("id_b").alias("id"))))
+        # `shingled` feeds BOTH pair sides (sh_a by id_a, sh_b by id_b);
+        # unpersisted, the semi-join + shingle pass planned and EXECUTED
+        # twice (plans/r12/b6_lsh_verify_cached_before.txt: two full
+        # copies of the docs-scan + shingle subtree, ReusedExchange 0 —
+        # the two joins key on different attributes so exchange reuse
+        # never matches). Persist halves the candidate-doc shingle pass
+        # and the cand_ids broadcast build (after-capture: one docs
+        # shingle scan + one broadcast; r12 wave 2, guide §2.4: measured
+        # 3.07 -> 2.32 s interleaved medians at sf0.1, row-identical; at
+        # 100 TB this halves the verify stage's dominant pass). Released
+        # with `candidates` when the scope exits.
+        shingled = s.persist(
+            df.join(cand_ids, df[id_col] == cand_ids["id"], "left_semi")
+            .select(F.col(id_col).alias("id"),
+                    _shingle_fn(shingles)(F.col(text_col), shingle_n)
+                    .alias("sh")))
+        sa = shingled.select(F.col("id").alias("id_a"),
+                             F.col("sh").alias("sh_a"))
+        sb = shingled.select(F.col("id").alias("id_b"),
+                             F.col("sh").alias("sh_b"))
+        inter = F.size(F.array_intersect("sh_a", "sh_b"))
+        verified = (candidates.join(sa, "id_a").join(sb, "id_b")
+                    .withColumn("inter", inter)
+                    .withColumn("jaccard", F.col("inter") /
+                                (F.size("sh_a") + F.size("sh_b")
+                                 - F.col("inter")))
+                    .where(F.col("jaccard") >= threshold)
+                    .select("id_a", "id_b", "jaccard"))
+        # the cache-manager entries for `candidates`/`shingled` are never
+        # GC-reclaimed, so a long-lived session calling this repeatedly
+        # would accumulate cached blocks; materialize the (tiny) verified
+        # pair set eagerly and keep it — the scope releases both caches
+        # when it exits, also when a job raises
+        return s.keep(s.checkpoint(verified, eager=True))
 
 
 P31 = (1 << 31) - 1  # Mersenne prime 2³¹−1
@@ -788,56 +800,58 @@ def near_duplicate_components(pairs: DataFrame, id_a: str = "id_a",
                 sorted(labels.items()), schema)
     edges = edges_in.select(F.col(id_a).alias("src"),
                             F.col(id_b).alias("dst"))
-    edges = (edges.union(edges.select(F.col("dst").alias("src"),
-                                      F.col("src").alias("dst")))
-             .distinct().localCheckpoint(eager=False))
-    labels = (edges.select(F.col("src").alias("id")).distinct()
-              .withColumn("component", F.col("id")))
-    from ..storage import release_checkpoint
-    for it in range(max_iterations):
-        neighbor_min = (edges.join(labels, edges["dst"] == labels["id"])
-                        .groupBy("src")
-                        .agg(F.min("component").alias("nbr_component")))
-        stepped = (labels.join(neighbor_min,
-                               labels["id"] == neighbor_min["src"], "left")
-                   .select(labels["id"],
-                           F.least(F.col("component"),
-                                   F.coalesce(F.col("nbr_component"),
-                                              F.col("component")))
-                           .alias("component")))
-        # pointer doubling: component := min(component, label[component])
-        parent = stepped.select(F.col("id").alias("pid"),
-                                F.col("component").alias("pcomponent"))
-        updated = (stepped.join(parent,
-                                stepped["component"] == parent["pid"], "left")
-                   .select(stepped["id"],
-                           F.least(stepped["component"],
-                                   F.coalesce(F.col("pcomponent"),
-                                              stepped["component"]))
-                           .alias("component"))
-                   .localCheckpoint(eager=True))
-        changed = (updated.alias("u")
-                   .join(labels.alias("l"), "id")
-                   .where(F.col("u.component") != F.col("l.component"))
-                   .count())
-        # the convergence count above was the last reader of the
-        # superseded label checkpoint — free its blocks now (round 0's
-        # `labels` is the lazy seed plan, nothing to free) so executor
-        # storage holds ONE label table, not one per iteration (guide
-        # §5; release_checkpoint because unpersist() cannot reach
-        # checkpoint blocks)
-        if it > 0:
-            release_checkpoint(labels)
-        labels = updated
-        if changed == 0:
-            break
-    # once any iteration ran, the returned labels table is an eager
-    # checkpoint and the symmetrized edge checkpoint has no further
-    # reader — free it (max_iterations=0 leaves labels a lazy plan
-    # OVER edges, so it must stay)
-    if max_iterations > 0:
-        release_checkpoint(edges)
-    return labels
+    with storage.scope() as s:
+        edges = s.checkpoint(
+            edges.union(edges.select(F.col("dst").alias("src"),
+                                     F.col("src").alias("dst")))
+            .distinct(), eager=False)
+        labels = (edges.select(F.col("src").alias("id")).distinct()
+                  .withColumn("component", F.col("id")))
+        for it in range(max_iterations):
+            neighbor_min = (edges.join(labels, edges["dst"] == labels["id"])
+                            .groupBy("src")
+                            .agg(F.min("component").alias("nbr_component")))
+            stepped = (labels.join(neighbor_min,
+                                   labels["id"] == neighbor_min["src"],
+                                   "left")
+                       .select(labels["id"],
+                               F.least(F.col("component"),
+                                       F.coalesce(F.col("nbr_component"),
+                                                  F.col("component")))
+                               .alias("component")))
+            # pointer doubling: component := min(component,
+            # label[component])
+            parent = stepped.select(F.col("id").alias("pid"),
+                                    F.col("component").alias("pcomponent"))
+            updated = s.checkpoint(
+                stepped.join(parent,
+                             stepped["component"] == parent["pid"], "left")
+                .select(stepped["id"],
+                        F.least(stepped["component"],
+                                F.coalesce(F.col("pcomponent"),
+                                           stepped["component"]))
+                        .alias("component")), eager=True)
+            changed = (updated.alias("u")
+                       .join(labels.alias("l"), "id")
+                       .where(F.col("u.component") != F.col("l.component"))
+                       .count())
+            # the convergence count above was the last reader of the
+            # superseded label checkpoint — free its blocks now (round
+            # 0's `labels` is the lazy seed plan, nothing to free) so
+            # executor storage holds ONE label table, not one per
+            # iteration (guide §5)
+            if it > 0:
+                s.release(labels)
+            labels = updated
+            if changed == 0:
+                break
+        # once any iteration ran, the returned labels table is an eager
+        # checkpoint and the scope frees the symmetrized edge checkpoint;
+        # max_iterations=0 leaves labels a lazy plan OVER edges, so the
+        # edges go with it
+        if max_iterations <= 0:
+            s.keep(edges)
+        return s.keep(labels)
 
 
 def deduplicate_near(df: DataFrame, id_col: str, pairs: DataFrame,

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import storage
 from .robots import url_host
 
 __all__ = ["extract_links", "link_edges", "pagerank",
@@ -104,7 +105,8 @@ def pagerank(edges: DataFrame, iterations: int = 3,
     is one equi-join onto the static ``(edge, out_degree)`` table plus
     one map-side-combinable sum — AQE broadcasts the rank side when it
     fits. Ranks are eagerly localCheckpoint-ed every iteration so plan
-    depth and lineage stay O(1) in ``iterations``.
+    depth and lineage stay O(1) in ``iterations``; each iteration frees
+    the previous one's ranks, and only the returned ranks stay stored.
     """
     if not 0 <= damping_pct <= 100:
         raise ValueError(f"damping_pct must be 0..100, got {damping_pct}")
@@ -116,24 +118,32 @@ def pagerank(edges: DataFrame, iterations: int = 3,
     # static per-iteration join input: every edge with its source's
     # out-degree attached (computed once, reused k times)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    ed = e.join(deg, "src").localCheckpoint(eager=True)
-    nodes = nodes.localCheckpoint(eager=True)
-
     base = ((100 - damping_pct) * micro) // 100
-    ranks = nodes.select("node", F.lit(int(micro)).alias("rank_micro"))
-    for _ in range(int(iterations)):
-        contrib = (ed.join(ranks, ed["src"] == ranks["node"])
-                   .select(F.col("dst").alias("node"),
-                           F.expr("rank_micro div out_deg")
-                           .alias("__c")))
-        incoming = contrib.groupBy("node").agg(F.sum("__c").alias("__s"))
-        ranks = (nodes.join(incoming, "node", "left")
-                 .select("node",
-                         (F.lit(base)
-                          + F.expr(f"({damping_pct} * coalesce(__s, 0))"
-                                   " div 100")).alias("rank_micro"))
-                 .localCheckpoint(eager=True))
-    return ranks
+    with storage.scope() as s:
+        ed = s.checkpoint(e.join(deg, "src"), eager=True)
+        nodes = s.checkpoint(nodes, eager=True)
+        ranks = nodes.select("node", F.lit(int(micro)).alias("rank_micro"))
+        for _ in range(int(iterations)):
+            contrib = (ed.join(ranks, ed["src"] == ranks["node"])
+                       .select(F.col("dst").alias("node"),
+                               F.expr("rank_micro div out_deg")
+                               .alias("__c")))
+            incoming = contrib.groupBy("node").agg(
+                F.sum("__c").alias("__s"))
+            stepped = s.checkpoint(
+                nodes.join(incoming, "node", "left")
+                .select("node",
+                        (F.lit(base)
+                         + F.expr(f"({damping_pct} * coalesce(__s, 0))"
+                                  " div 100")).alias("rank_micro")),
+                eager=True)
+            # the eager step read the previous ranks for the last time
+            s.release(ranks)
+            ranks = stepped
+        # with no iteration the returned plan still reads `nodes`
+        if int(iterations) <= 0:
+            s.keep(nodes)
+        return s.keep(ranks)
 
 
 # a whole <a> element (href + inner markup); inner text captured lazily

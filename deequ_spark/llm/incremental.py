@@ -66,6 +66,7 @@ from typing import Optional, Tuple
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import storage
 from .dedup import _nonblank, minhash_signatures
 from .text import fingerprint
 
@@ -328,8 +329,8 @@ def write_dedup_index(df: DataFrame, id_col: str, text_col: str,
                     fingerprint(F.col(text_col)).alias("fingerprint"))
     docs = fps.join(sigs, "id").select("id", "fingerprint", "signature")
     # docs feeds four derived writes — compute signatures once
-    docs = docs.persist()
-    try:
+    with storage.scope() as s:
+        docs = s.persist(docs)
         # fingerprint Bloom (the classify pre-filter's bits): built
         # FIRST, before any index write. The batch `df` is often a
         # lazy classify plan over this very index (crawl loop); the
@@ -369,8 +370,6 @@ def write_dedup_index(df: DataFrame, id_col: str, text_col: str,
             _write_fps_bloom(spark, path,
                              merge_blooms(existing, batch_bloom)
                              if existing else batch_bloom)
-    finally:
-        docs.unpersist()
     meta = df.sparkSession.createDataFrame(
         [(num_hashes, shingle_n, bands, partner_cap, n_buckets,
           shingles)],
@@ -403,23 +402,25 @@ def compact_dedup_index(spark: SparkSession, path: str) -> None:
                .groupBy("band", "bh")
                .agg(F.slice(F.sort_array(F.collect_set("matched_id")),
                             1, meta["partner_cap"]).alias("partner_ids")))
-    # materialize BEFORE overwriting the inputs they read from
-    fps = fps.localCheckpoint()
-    buckets = buckets.localCheckpoint()
-    _write_index_table(fps, path, "fps", "fingerprint",
-                       meta["n_buckets"], "overwrite")
-    _write_index_table(buckets, path, "buckets", ["band", "bh"],
-                       meta["n_buckets"], "overwrite")
-    # re-size the fingerprint Bloom from the ACTUAL compacted key count
-    # (appends OR into a fixed-shape bitmap, drifting toward saturation
-    # past its design capacity; compaction is the re-sizing point) —
-    # this also retrofits the bloom onto a pre-r12 index
     from ..bloom import build_bloom
-    n = fps.count()
-    _write_fps_bloom(spark, path,
-                     build_bloom(fps.select("fingerprint"),
-                                 "fingerprint", expected_items=n,
-                                 shape=_bloom_shape_for(n)))
+    with storage.scope() as s:
+        # materialize BEFORE overwriting the inputs they read from
+        fps = s.checkpoint(fps)
+        buckets = s.checkpoint(buckets)
+        _write_index_table(fps, path, "fps", "fingerprint",
+                           meta["n_buckets"], "overwrite")
+        _write_index_table(buckets, path, "buckets", ["band", "bh"],
+                           meta["n_buckets"], "overwrite")
+        # re-size the fingerprint Bloom from the ACTUAL compacted key
+        # count (appends OR into a fixed-shape bitmap, drifting toward
+        # saturation past its design capacity; compaction is the
+        # re-sizing point) — this also retrofits the bloom onto a
+        # pre-r12 index
+        n = fps.count()
+        _write_fps_bloom(spark, path,
+                         build_bloom(fps.select("fingerprint"),
+                                     "fingerprint", expected_items=n,
+                                     shape=_bloom_shape_for(n)))
 
 
 def dedup_against_index(new_df: DataFrame, id_col: str, text_col: str,
@@ -536,8 +537,9 @@ def dedup_against_index(new_df: DataFrame, id_col: str, text_col: str,
         # scan — the hazard that previously required a
         # nondeterministic rand() no-op in the probed key (now
         # unnecessary: no probe expression survives into the join
-        # plan at all).
-        new_fp = new_fp.localCheckpoint(eager=True)
+        # plan at all). The returned plans read it, so it is kept.
+        with storage.scope() as s:
+            new_fp = s.keep(s.checkpoint(new_fp, eager=True))
     # fps is pre-aggregated to one row per fingerprint at write time;
     # an append-grown index may hold one row per appended batch — the
     # fan-out is bounded by the append count, and min-of-mins below
@@ -645,50 +647,55 @@ def crawl_dedup_stream(spark: SparkSession, warc_path: str,
                     shingles=shingles)
 
     def handle(batch_df, batch_id):
-        docs = batch_df.select(
-            F.xxhash64(F.col("url"), F.col("text")).alias("doc_id"),
-            "url", "text")
-        # intra-batch dedup: re-fetches (same id), then exact content
-        # (same fingerprint, min id), then near (LSH over the batch)
-        docs = docs.dropDuplicates(["doc_id"])
-        fp_win = (docs
-                  .groupBy(fingerprint(F.col("text")).alias("__fp"))
-                  .agg(F.min("doc_id").alias("doc_id")))
-        docs = docs.join(fp_win.select("doc_id"), "doc_id", "semi")
-        if within_batch_near:
-            pairs = minhash_lsh_pairs(
-                docs, "doc_id", "text", threshold=threshold,
-                num_hashes=num_hashes, bands=bands,
-                shingle_n=shingle_n, shingles=shingles)
-            docs = deduplicate_near(docs, "doc_id", pairs)
-        docs = docs.localCheckpoint(eager=True)
+        # the batch's internal checkpoints (the intra-batch docs, the
+        # LSH pairs, the classify's bloom sliver) are freed when the
+        # batch ends; the two frames the callbacks receive are kept
+        with storage.scope() as s:
+            docs = batch_df.select(
+                F.xxhash64(F.col("url"), F.col("text")).alias("doc_id"),
+                "url", "text")
+            # intra-batch dedup: re-fetches (same id), then exact
+            # content (same fingerprint, min id), then near (LSH over
+            # the batch)
+            docs = docs.dropDuplicates(["doc_id"])
+            fp_win = (docs
+                      .groupBy(fingerprint(F.col("text")).alias("__fp"))
+                      .agg(F.min("doc_id").alias("doc_id")))
+            docs = docs.join(fp_win.select("doc_id"), "doc_id", "semi")
+            if within_batch_near:
+                pairs = minhash_lsh_pairs(
+                    docs, "doc_id", "text", threshold=threshold,
+                    num_hashes=num_hashes, bands=bands,
+                    shingle_n=shingle_n, shingles=shingles)
+                docs = deduplicate_near(docs, "doc_id", pairs)
+            docs = s.checkpoint(docs, eager=True)
 
-        if not _path_exists(spark, f"{index_path}/meta"):
-            fresh, dups = docs, None
-        else:
-            _, dups = dedup_against_index(
-                docs, "doc_id", "text", index_path,
-                threshold=threshold)
-            # classify runs ONCE (here); fresh re-derives from the
-            # checkpointed dups so neither it nor a deferred
-            # on_duplicates callback can replay the classify against
-            # the directory the append below is about to grow
-            dups = dups.localCheckpoint(eager=True)
-            fresh = docs.join(
-                dups.select(F.col("id").alias("doc_id")),
-                "doc_id", "left_anti").localCheckpoint(eager=True)
-        if on_duplicates is not None and dups is not None:
-            on_duplicates(dups, batch_id)
-        on_fresh(fresh, batch_id)
-        if fresh.limit(1).count():
-            mode = ("append"
-                    if _path_exists(spark, f"{index_path}/meta")
-                    else "overwrite")
-            write_dedup_index(fresh, "doc_id", "text", index_path,
-                              n_buckets=n_buckets, mode=mode,
-                              **geometry)
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_dedup_index(spark, index_path)
+            if not _path_exists(spark, f"{index_path}/meta"):
+                fresh, dups = s.keep(docs), None
+            else:
+                _, dups = dedup_against_index(
+                    docs, "doc_id", "text", index_path,
+                    threshold=threshold)
+                # classify runs ONCE (here); fresh re-derives from the
+                # checkpointed dups so neither it nor a deferred
+                # on_duplicates callback can replay the classify against
+                # the directory the append below is about to grow
+                dups = s.keep(s.checkpoint(dups, eager=True))
+                fresh = s.keep(s.checkpoint(docs.join(
+                    dups.select(F.col("id").alias("doc_id")),
+                    "doc_id", "left_anti"), eager=True))
+            if on_duplicates is not None and dups is not None:
+                on_duplicates(dups, batch_id)
+            on_fresh(fresh, batch_id)
+            if fresh.limit(1).count():
+                mode = ("append"
+                        if _path_exists(spark, f"{index_path}/meta")
+                        else "overwrite")
+                write_dedup_index(fresh, "doc_id", "text", index_path,
+                                  n_buckets=n_buckets, mode=mode,
+                                  **geometry)
+            if compact_every and (batch_id + 1) % compact_every == 0:
+                compact_dedup_index(spark, index_path)
 
     stream = wet_documents(read_warc_stream(
         spark, warc_path, warc_types={"conversion"},

@@ -746,79 +746,6 @@ class _AcRefineScanEncoder:
                 self.flush()
 
 
-def _encode_ac_first(wtr, zz, ss, se, al, ac):
-    """First AC pass of a band: point transform truncates toward zero
-    (T.81 G.1.2.2 — unlike DC's arithmetic shift); EOB0 per block."""
-    run = 0
-    emitted = False
-    for k in range(ss, se + 1):
-        v = int(zz[k])
-        t = (abs(v) >> al) * (1 if v >= 0 else -1)
-        if t == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, length = ac[0xF0]
-            wtr.write(code, length)
-            run -= 16
-        size, bits = _magnitude(t)
-        code, length = ac[(run << 4) | size]
-        wtr.write(code, length)
-        wtr.write(bits, size)
-        run = 0
-        emitted = True
-    if run > 0 or not emitted:
-        code, length = ac[0x00]                     # EOB0
-        wtr.write(code, length)
-
-
-def _encode_ac_refine(wtr, zz, ss, se, al, ac):
-    """Successive-approximation AC refinement (T.81 G.1.2.3): newly
-    significant coefficients (magnitude 1 at this precision) get
-    run+sign codes; already-significant ones get buffered correction
-    bits flushed after the next symbol (ZRL/coef/EOB)."""
-    absv = {k: abs(int(zz[k])) >> al for k in range(ss, se + 1)}
-    # EOB = last newly-significant position; zero-runs and correction
-    # bits beyond it fold into the closing EOB instead of ZRLs
-    eob = ss - 1
-    for k in range(ss, se + 1):
-        if absv[k] == 1:
-            eob = k
-    run = 0
-    br = []
-    for k in range(ss, se + 1):
-        t = absv[k]
-        if t == 0:
-            run += 1
-            continue
-        # pending ZRLs are emitted at ANY nonzero coefficient — a
-        # history coefficient's correction bit must be buffered AFTER
-        # them, because the decoder's ZRL traversal stops at the 16th
-        # zero-HISTORY slot and only consumes bits interleaved within it
-        while run > 15 and k <= eob:
-            code, length = ac[0xF0]
-            wtr.write(code, length)
-            run -= 16
-            for bit in br:
-                wtr.write(bit, 1)
-            br = []
-        if t > 1:                                   # history coefficient
-            br.append(t & 1)
-            continue
-        code, length = ac[(run << 4) | 1]
-        wtr.write(code, length)
-        wtr.write(1 if int(zz[k]) >= 0 else 0, 1)
-        run = 0
-        for bit in br:
-            wtr.write(bit, 1)
-        br = []
-    if run > 0 or br:
-        code, length = ac[0x00]                     # EOB0 closes the band
-        wtr.write(code, length)
-        for bit in br:
-            wtr.write(bit, 1)
-
-
 # ---------------------------------------------------------------------------
 # decoder
 # ---------------------------------------------------------------------------

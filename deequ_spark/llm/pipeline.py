@@ -28,12 +28,13 @@ paying their own (``collect_stats=False`` only skips the count jobs).
 
 from __future__ import annotations
 
+import contextlib
 from typing import Dict, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..storage import checkpoint_materialized, release_checkpoint
+from .. import storage
 from .dedup import (deduplicate_near, duplicate_span_removal,
                     minhash_lsh_pairs)
 from .packing import hash_sample, pack_sequences
@@ -149,247 +150,238 @@ def prepare_training_corpus(df: DataFrame, id_col: str, text_col: str,
     cosine ``semantic_decon_threshold`` of any eval embedding, the
     paraphrase-robust complement (requires ``embeddings``)."""
     stats: Dict[str, int] = {}
-    # localCheckpoint placement (r12, guide §2.4/§1.2): cuts happen at
-    # the INPUT of every stage that references the running frame more
-    # than once (boilerplate, paragraph/span dedup, exact/near/semantic
-    # dedup, decontamination, LM filter, DSIR) — a multi-referencing
-    # stage over an uncut plan would duplicate the whole upstream
-    # subtree per reference (plan growth is multiplicative; every
-    # reference RECOMPUTES) — and NOT after single-reference map-only
-    # stages (normalize, c4_clean, quality, sample, pack, chunk), which
-    # now fuse into the next materialization instead of paying their
-    # own. Measured on the bench chain: 7 cuts → 5, ~1.5 s less
-    # materialization per run, byte-identical output
-    # (tools/profile_pipeline_r12.py). `dirty` tracks whether any
-    # transform has been applied since the last cut, so the FIRST
-    # multi-ref stage straight off the raw source skips the cut — the
-    # raw input is usually a cheap re-scannable projection, and
-    # checkpointing it would copy the whole corpus into executor
-    # storage for nothing. checkpoint_input=True pre-marks the source
-    # dirty for inputs that are NOT cheap to re-derive (an opaque
-    # parse — see the docstring).
-    state = {"dirty": bool(checkpoint_input)}
+    # every cut, and every checkpoint a stage keeps (minhash verified
+    # pairs, semantic-dedup losers, the boilerplate set), belongs to
+    # this scope, which frees them on exit — all but the returned cut.
+    # Without cuts the returned frame is a lazy plan that still reads
+    # those checkpoints, so no scope is opened and they go to the
+    # caller.
+    with (storage.scope() if checkpoint_stages
+          else contextlib.nullcontext()) as s:
+        # localCheckpoint placement (r12, guide §2.4/§1.2): cuts happen at
+        # the INPUT of every stage that references the running frame more
+        # than once (boilerplate, paragraph/span dedup, exact/near/semantic
+        # dedup, decontamination, LM filter, DSIR) — a multi-referencing
+        # stage over an uncut plan would duplicate the whole upstream
+        # subtree per reference (plan growth is multiplicative; every
+        # reference RECOMPUTES) — and NOT after single-reference map-only
+        # stages (normalize, c4_clean, quality, sample, pack, chunk), which
+        # now fuse into the next materialization instead of paying their
+        # own. Measured on the bench chain: 7 cuts → 5, ~1.5 s less
+        # materialization per run, byte-identical output
+        # (tools/profile_pipeline_r12.py). `dirty` tracks whether any
+        # transform has been applied since the last cut, so the FIRST
+        # multi-ref stage straight off the raw source skips the cut — the
+        # raw input is usually a cheap re-scannable projection, and
+        # checkpointing it would copy the whole corpus into executor
+        # storage for nothing. checkpoint_input=True pre-marks the source
+        # dirty for inputs that are NOT cheap to re-derive (an opaque
+        # parse — see the docstring).
+        state = {"dirty": bool(checkpoint_input)}
 
-    def sweep_cuts() -> None:
-        """Release the longest prefix of superseded cuts whose successor
-        has materialized (a stage's own actions materialize its input
-        cut lazily; the predecessor becomes garbage the moment that
-        happens)."""
-        cuts = state.get("cuts", [])
-        while len(cuts) >= 2 and checkpoint_materialized(cuts[1]):
-            release_checkpoint(cuts.pop(0))
+        def sweep_cuts() -> None:
+            """Release the longest prefix of superseded cuts whose successor
+            has materialized (a stage's own actions materialize its input
+            cut lazily; the predecessor becomes garbage the moment that
+            happens)."""
+            cuts = state.get("cuts", [])
+            while len(cuts) >= 2 and storage.checkpoint_materialized(cuts[1]):
+                s.release(cuts.pop(0))
 
-    def note(stage: str, frame: DataFrame) -> DataFrame:
-        state["dirty"] = True
-        if collect_stats:
-            stats[stage] = frame.count()
-        sweep_cuts()
-        return frame
-
-    def cut_in(frame: DataFrame, eager: bool = False) -> DataFrame:
-        """Truncate (and eventually materialize) before a
-        multi-referencing stage.
-
-        r13 (guide §2.4/§1.2): intermediate cuts are LAZY
-        (``eager=False``) — the plan is truncated immediately, but the
-        materialization job FUSES into the stage's first action instead
-        of paying a dedicated full-corpus job + barrier per cut (the
-        r12 chain ran 5 eager cut jobs back to back; the lazy form runs
-        the same work inside jobs the stages already pay). Correctness
-        is unchanged: a localCheckpoint RDD computes once and every
-        later reference reads its blocks, whether the first computation
-        was a dedicated job (eager) or the stage's own first action
-        (lazy). Only the FINAL cut stays eager — the documented
-        contract is that the RETURNED frame is materialized.
-
-        Release discipline (guide §5, r12): a superseded cut's blocks
-        are freed as soon as its SUCCESSOR is materialized — with lazy
-        cuts that is no longer guaranteed at creation time (the new
-        cut's first job still needs the old blocks), so each cut_in
-        releases the longest prefix of superseded cuts whose successor
-        has actually materialized (``checkpoint_materialized``), and
-        the final eager cut — which forces the whole chain — releases
-        everything but itself. ``release_checkpoint`` frees the
-        checkpoint RDD's blocks directly (``unpersist()`` alone only
-        touches CacheManager entries — r12 verdict; verified by
-        tests/test_r13_storage.py)."""
-        if state["dirty"] and checkpoint_stages:
-            frame = frame.localCheckpoint(eager=eager)
-            state.setdefault("cuts", []).append(frame)
+        def note(stage: str, frame: DataFrame) -> DataFrame:
+            state["dirty"] = True
+            if collect_stats:
+                stats[stage] = frame.count()
             sweep_cuts()
-            state["dirty"] = False
-        return frame
+            return frame
 
-    in_cols = [id_col, text_col] + ([url_col] if url_col else [])
-    out = df.select(*in_cols)
-    if collect_stats:
-        stats["input"] = out.count()
+        def cut_in(frame: DataFrame, eager: bool = False) -> DataFrame:
+            """Truncate (and eventually materialize) before a
+            multi-referencing stage.
 
-    if url_col is not None:
-        out = note("url_dedup",
-                   url_deduplicate(out, id_col, url_col)
-                   .select(id_col, text_col))
+            Intermediate cuts are LAZY (r13, guide §2.4/§1.2): the plan
+            is truncated now, and the materialization fuses into the
+            stage's first action instead of a dedicated full-corpus job
+            per cut. Only the FINAL cut is eager — the RETURNED frame is
+            materialized. A superseded cut is released once its
+            successor has materialized (``checkpoint_materialized``:
+            the successor's first job still reads the old blocks); the
+            chain's scope frees the rest on exit."""
+            if state["dirty"] and checkpoint_stages:
+                frame = s.checkpoint(frame, eager=eager)
+                state.setdefault("cuts", []).append(frame)
+                sweep_cuts()
+                state["dirty"] = False
+            return frame
 
-    if unicode_normalize:
-        out = note("normalize", normalize_text(out, text_col)
-                   .select(id_col, F.col(f"{text_col}_clean")
-                           .alias(text_col))
-                   .where(F.length(text_col) > 0))
+        in_cols = [id_col, text_col] + ([url_col] if url_col else [])
+        out = df.select(*in_cols)
+        if collect_stats:
+            stats["input"] = out.count()
 
-    if c4_clean:
-        # C4 line filtering runs BEFORE the page-level quality gate:
-        # boilerplate lines it removes should not count toward Gopher's
-        # word/line statistics
-        c4 = c4_line_clean(out, text_col,
-                           min_words_per_line=c4_min_words_per_line)
-        out = note("c4_clean",
-                   c4.select(id_col, F.col(f"{text_col}_c4")
-                             .alias(text_col))
-                   .where(F.length(text_col) > 0))
+        if url_col is not None:
+            out = note("url_dedup",
+                       url_deduplicate(out, id_col, url_col)
+                       .select(id_col, text_col))
 
-    if quality_filter:
-        # gopher_kwargs: extra thresholds forwarded to gopher_quality_flags
-        # (corpora differ — e.g. code corpora rarely hit 2 English stopwords)
-        flagged = gopher_quality_flags(out, text_col, min_words=min_words,
-                                       **(gopher_kwargs or {}))
-        if c4_page_filter:
-            flagged = c4_page_flags(flagged, text_col)
-            flagged = flagged.where(F.col("gq_keep") & F.col("c4_keep"))
-        else:
-            flagged = flagged.where(F.col("gq_keep"))
-        out = note("quality", flagged.select(id_col, text_col))
-    elif c4_page_filter:
-        out = note("quality",
-                   c4_page_flags(out, text_col).where(F.col("c4_keep"))
-                   .select(id_col, text_col))
+        if unicode_normalize:
+            out = note("normalize", normalize_text(out, text_col)
+                       .select(id_col, F.col(f"{text_col}_clean")
+                               .alias(text_col))
+                       .where(F.length(text_col) > 0))
 
-    if boilerplate:
-        out = cut_in(out)
-        cleaned = remove_boilerplate_lines(out, id_col, text_col,
-                                           min_docs=boilerplate_min_docs)
-        out = note("boilerplate", cleaned
-                   .select(id_col, F.col("cleaned").alias(text_col))
-                   .where(F.length(text_col) > 0))
+        if c4_clean:
+            # C4 line filtering runs BEFORE the page-level quality gate:
+            # boilerplate lines it removes should not count toward Gopher's
+            # word/line statistics
+            c4 = c4_line_clean(out, text_col,
+                               min_words_per_line=c4_min_words_per_line)
+            out = note("c4_clean",
+                       c4.select(id_col, F.col(f"{text_col}_c4")
+                                 .alias(text_col))
+                       .where(F.length(text_col) > 0))
 
-    if paragraph_dedup_sep is not None:
-        out = cut_in(out)
-        span = paragraph_dedup(out, id_col, text_col,
-                               sep=paragraph_dedup_sep)
-        out = note("paragraph_dedup",
-                   span.select(id_col, F.col("deduped").alias(text_col))
-                   .where(F.length(text_col) > 0))
+        if quality_filter:
+            # gopher_kwargs: extra thresholds forwarded to
+            # gopher_quality_flags (corpora differ — e.g. code corpora
+            # rarely hit 2 English stopwords)
+            flagged = gopher_quality_flags(out, text_col, min_words=min_words,
+                                           **(gopher_kwargs or {}))
+            if c4_page_filter:
+                flagged = c4_page_flags(flagged, text_col)
+                flagged = flagged.where(F.col("gq_keep") & F.col("c4_keep"))
+            else:
+                flagged = flagged.where(F.col("gq_keep"))
+            out = note("quality", flagged.select(id_col, text_col))
+        elif c4_page_filter:
+            out = note("quality",
+                       c4_page_flags(out, text_col).where(F.col("c4_keep"))
+                       .select(id_col, text_col))
 
-    if span_dedup_n is not None:
-        out = cut_in(out)
-        span2 = duplicate_span_removal(out, id_col, text_col,
-                                       n=span_dedup_n)
-        out = note("span_dedup",
-                   span2.select(id_col, F.col("deduped").alias(text_col))
-                   .where(F.length(text_col) > 0))
+        if boilerplate:
+            out = cut_in(out)
+            cleaned = remove_boilerplate_lines(out, id_col, text_col,
+                                               min_docs=boilerplate_min_docs)
+            out = note("boilerplate", cleaned
+                       .select(id_col, F.col("cleaned").alias(text_col))
+                       .where(F.length(text_col) > 0))
 
-    if exact_dedup:
-        # keep one representative (min id) per identical normalized text
-        out = cut_in(out)
-        w_fp = out.withColumn("__fp", fingerprint(F.col(text_col)))
-        keep = (w_fp.groupBy("__fp")
-                .agg(F.min(id_col).alias(id_col)).select(id_col))
-        out = note("exact_dedup",
-                   out.join(keep, id_col, "left_semi"))
+        if paragraph_dedup_sep is not None:
+            out = cut_in(out)
+            span = paragraph_dedup(out, id_col, text_col,
+                                   sep=paragraph_dedup_sep)
+            out = note("paragraph_dedup",
+                       span.select(id_col, F.col("deduped").alias(text_col))
+                       .where(F.length(text_col) > 0))
 
-    if near_dedup:
-        out = cut_in(out)
-        pairs = minhash_lsh_pairs(out, id_col, text_col,
-                                  threshold=near_dup_threshold)
-        out = note("near_dedup", deduplicate_near(out, id_col, pairs))
+        if span_dedup_n is not None:
+            out = cut_in(out)
+            span2 = duplicate_span_removal(out, id_col, text_col,
+                                           n=span_dedup_n)
+            out = note("span_dedup",
+                       span2.select(id_col, F.col("deduped").alias(text_col))
+                       .where(F.length(text_col) > 0))
 
-    if embeddings is not None:
-        emb_id, emb_vec = embedding_cols
-        # restrict the (costlier) embedding pass to lexical survivors
-        out = cut_in(out)
-        surv = embeddings.join(
-            out.select(F.col(id_col).alias(emb_id)), emb_id, "left_semi")
-        kept = semantic_deduplicate(surv, emb_id, emb_vec,
-                                    threshold=semantic_threshold,
-                                    n_clusters=semantic_clusters)
-        # drop the LOSERS rather than keep the winners: documents with
-        # no embedding row cannot be judged and must pass through
-        losers = (surv.select(emb_id)
-                  .join(kept.select(emb_id), emb_id, "left_anti"))
-        out = note("semantic_dedup", out.join(
-            losers.select(F.col(emb_id).alias(id_col)),
-            id_col, "left_anti"))
+        if exact_dedup:
+            # keep one representative (min id) per identical normalized text
+            out = cut_in(out)
+            w_fp = out.withColumn("__fp", fingerprint(F.col(text_col)))
+            keep = (w_fp.groupBy("__fp")
+                    .agg(F.min(id_col).alias(id_col)).select(id_col))
+            out = note("exact_dedup",
+                       out.join(keep, id_col, "left_semi"))
 
-    if benchmark is not None:
-        out = cut_in(out)
-        clean, _contaminated = decontaminate(
-            out, id_col, text_col, benchmark, bench_text_col,
-            n=decontaminate_ngram)
-        out = note("decontaminate", clean)
+        if near_dedup:
+            out = cut_in(out)
+            pairs = minhash_lsh_pairs(out, id_col, text_col,
+                                      threshold=near_dup_threshold)
+            out = note("near_dedup", deduplicate_near(out, id_col, pairs))
 
-    if benchmark_embeddings is not None:
-        if embeddings is None:
-            raise ValueError(
-                "benchmark_embeddings requires `embeddings` (the corpus "
-                "side's embedding table)")
-        from .similarity import semantic_decontaminate
-        emb_id, emb_vec = embedding_cols
-        out = cut_in(out)
-        surv = embeddings.join(
-            out.select(F.col(id_col).alias(emb_id)), emb_id, "left_semi")
-        _c, contam = semantic_decontaminate(
-            surv, emb_id, emb_vec, benchmark_embeddings,
-            bench_embedding_cols[1],
-            threshold=semantic_decon_threshold)
-        # drop flagged ids; unembedded docs are unjudgeable → pass
-        out = note("semantic_decontaminate", out.join(
-            contam.select(F.col(emb_id).alias(id_col)), id_col,
-            "left_anti"))
+        if embeddings is not None:
+            emb_id, emb_vec = embedding_cols
+            # restrict the (costlier) embedding pass to lexical survivors
+            out = cut_in(out)
+            surv = embeddings.join(
+                out.select(F.col(id_col).alias(emb_id)), emb_id, "left_semi")
+            kept = semantic_deduplicate(surv, emb_id, emb_vec,
+                                        threshold=semantic_threshold,
+                                        n_clusters=semantic_clusters)
+            # drop the LOSERS rather than keep the winners: documents with
+            # no embedding row cannot be judged and must pass through
+            losers = (surv.select(emb_id)
+                      .join(kept.select(emb_id), emb_id, "left_anti"))
+            out = note("semantic_dedup", out.join(
+                losers.select(F.col(emb_id).alias(id_col)),
+                id_col, "left_anti"))
 
-    if lm_filter_quantile is not None:
-        if not 0.0 < lm_filter_quantile <= 1.0:
-            raise ValueError("lm_filter_quantile must be in (0, 1]")
-        out = cut_in(out)
-        model = char_trigram_model(out, text_col)
-        scored = lm_quality_score(out, id_col, text_col, model)
-        # exact quantile of the (per-doc, small) score column; docs too
-        # short to score pass the gate (nothing to judge)
-        cut = scored.agg(F.expr(
-            f"percentile(cross_entropy, {lm_filter_quantile})")
-        ).collect()[0][0]
-        out = note("lm_filter", scored.where(
-            F.col("cross_entropy").isNull()
-            | (F.col("cross_entropy") <= F.lit(cut)))
-            .select(id_col, text_col))
+        if benchmark is not None:
+            out = cut_in(out)
+            clean, _contaminated = decontaminate(
+                out, id_col, text_col, benchmark, bench_text_col,
+                n=decontaminate_ngram)
+            out = note("decontaminate", clean)
 
-    if dsir_target is not None:
-        if dsir_k is None:
-            raise ValueError("dsir_k is required with dsir_target")
-        from .packing import importance_sample
-        out = cut_in(out)
-        out = note("dsir", importance_sample(
-            out, id_col, text_col, dsir_target, k=dsir_k,
-            temperature=dsir_temperature)
-            .select(id_col, text_col))
+        if benchmark_embeddings is not None:
+            if embeddings is None:
+                raise ValueError(
+                    "benchmark_embeddings requires `embeddings` (the corpus "
+                    "side's embedding table)")
+            from .similarity import semantic_decontaminate
+            emb_id, emb_vec = embedding_cols
+            out = cut_in(out)
+            surv = embeddings.join(
+                out.select(F.col(id_col).alias(emb_id)), emb_id, "left_semi")
+            _c, contam = semantic_decontaminate(
+                surv, emb_id, emb_vec, benchmark_embeddings,
+                bench_embedding_cols[1],
+                threshold=semantic_decon_threshold)
+            # drop flagged ids; unembedded docs are unjudgeable → pass
+            out = note("semantic_decontaminate", out.join(
+                contam.select(F.col(emb_id).alias(id_col)), id_col,
+                "left_anti"))
 
-    if sample_fraction is not None:
-        out = note("sample", hash_sample(out, id_col, sample_fraction))
+        if lm_filter_quantile is not None:
+            if not 0.0 < lm_filter_quantile <= 1.0:
+                raise ValueError("lm_filter_quantile must be in (0, 1]")
+            out = cut_in(out)
+            model = char_trigram_model(out, text_col)
+            scored = lm_quality_score(out, id_col, text_col, model)
+            # exact quantile of the (per-doc, small) score column; docs too
+            # short to score pass the gate (nothing to judge)
+            cut = scored.agg(F.expr(
+                f"percentile(cross_entropy, {lm_filter_quantile})")
+            ).collect()[0][0]
+            out = note("lm_filter", scored.where(
+                F.col("cross_entropy").isNull()
+                | (F.col("cross_entropy") <= F.lit(cut)))
+                .select(id_col, text_col))
 
-    if pack_budget is not None:
-        out = note("packs", pack_sequences(
-            out, id_col, token_count_whitespace(F.col(text_col)),
-            budget=pack_budget))
-    elif chunk:
-        out = note("chunks", chunk_text(out, id_col, text_col,
-                                        chunk_tokens=chunk_tokens,
-                                        overlap=chunk_overlap))
-    # contract: the RETURNED frame is materialized (localCheckpoint-ed)
-    # whenever any transform ran — callers re-read it freely without
-    # recomputing the chain. The eager final cut forces every pending
-    # lazy cut in the chain to materialize, after which all superseded
-    # cuts are released — executor storage ends the call holding ONE
-    # corpus copy (plus operator-internal checkpoints), exactly as the
-    # r12 eager chain did.
-    out = cut_in(out, eager=True)
-    for prev in state.get("cuts", [])[:-1]:
-        release_checkpoint(prev)
-    return out, stats
+        if dsir_target is not None:
+            if dsir_k is None:
+                raise ValueError("dsir_k is required with dsir_target")
+            from .packing import importance_sample
+            out = cut_in(out)
+            out = note("dsir", importance_sample(
+                out, id_col, text_col, dsir_target, k=dsir_k,
+                temperature=dsir_temperature)
+                .select(id_col, text_col))
+
+        if sample_fraction is not None:
+            out = note("sample", hash_sample(out, id_col, sample_fraction))
+
+        if pack_budget is not None:
+            out = note("packs", pack_sequences(
+                out, id_col, token_count_whitespace(F.col(text_col)),
+                budget=pack_budget))
+        elif chunk:
+            out = note("chunks", chunk_text(out, id_col, text_col,
+                                            chunk_tokens=chunk_tokens,
+                                            overlap=chunk_overlap))
+        # contract: the RETURNED frame is materialized (localCheckpoint-ed)
+        # whenever any transform ran — callers re-read it freely without
+        # recomputing the chain. The eager final cut forces every pending
+        # lazy cut in the chain to materialize; the scope then frees the
+        # superseded cuts and the stages' checkpoints — executor storage
+        # ends the call holding ONE corpus copy, the returned frame.
+        out = cut_in(out, eager=True)
+        return (s.keep(out) if s else out), stats

@@ -39,6 +39,7 @@ import pandas  # noqa: F401 — pandas_udf type hints resolve at module scope
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import storage
 from .similarity import _hyperplane_matrix, _hyperplane_signature, \
     kmeans_centroids
 
@@ -257,9 +258,9 @@ def semantic_deduplicate(df: DataFrame, id_col: str, vec_col: str,
 
     if centroids is None:
         centroids = kmeans_centroids(df, vec_col, n_clusters, seed=seed)
-    assigned = assign_clusters(df.select(id_col, vec_col), vec_col,
-                               centroids).persist()
-    try:
+    with storage.scope() as s:
+        assigned = s.persist(assign_clusters(df.select(id_col, vec_col),
+                                             vec_col, centroids))
         pairs = semantic_duplicate_pairs(
             df, id_col, vec_col, threshold, centroids,
             max_cluster_rows=max_cluster_rows, n_bands=n_bands, seed=seed,
@@ -271,10 +272,9 @@ def semantic_deduplicate(df: DataFrame, id_col: str, vec_col: str,
                       Window.partitionBy("component")
                       .orderBy(F.col("centroid_sim").asc(),
                                F.col("id").asc()))))
-        # materialize the loser set before releasing the assignment —
-        # the lazy anti-join below must not re-score the corpus
-        losers = (ranked.where(F.col("__rk") > 1).select("id")
-                  .localCheckpoint(eager=True))
-    finally:
-        assigned.unpersist()
+        # materialize the loser set before the scope releases the
+        # assignment (and the component labels) — the lazy anti-join
+        # below must not re-score the corpus
+        losers = s.keep(s.checkpoint(
+            ranked.where(F.col("__rk") > 1).select("id"), eager=True))
     return df.join(losers, df[id_col] == losers["id"], "left_anti")

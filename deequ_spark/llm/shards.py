@@ -31,6 +31,8 @@ import pandas  # noqa: F401 — mapInPandas type hints resolve at module scope
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import storage
+
 __all__ = ["write_webdataset", "read_webdataset", "derive_n_shards",
            "tar_members", "update_webdataset_index",
            "webdataset_index"]
@@ -312,8 +314,18 @@ def update_webdataset_index(spark, index_path: str,
     store grows by whole shards). Rows of deleted shards are dropped;
     first call bootstraps. Returns ``{"known_files": n,
     "scanned_files": n, "removed_rows": n}``."""
+    return _update_file_index(spark, index_path, shard_glob,
+                              webdataset_index)
+
+
+def _update_file_index(spark, index_path: str, file_glob: str,
+                       build_index) -> dict:
+    """The incremental contract of ``update_webdataset_index`` and
+    ``warc.update_cdx_index``: ``build_index`` maps ``(path, content)``
+    binaryFile rows of the files the parquet index does not know yet to
+    the rows appended; rows of files no longer matched are dropped."""
     from pyspark.errors import AnalysisException
-    files = spark.read.format("binaryFile").load(shard_glob)
+    files = spark.read.format("binaryFile").load(file_glob)
     current = {r["path"] for r in files.select("path").collect()}
     try:
         idx = spark.read.parquet(index_path)
@@ -332,11 +344,14 @@ def update_webdataset_index(spark, index_path: str,
             [(p,) for p in sorted(current)], "path string")
         removed = idx.join(F.broadcast(cur_df), "path",
                            "left_anti").count()
-        kept = idx.join(F.broadcast(cur_df), "path", "left_semi") \
-            .localCheckpoint(eager=True)
-        kept.write.mode("overwrite").parquet(index_path)
+        # materialized: the overwrite must never lazily read the
+        # directory it is replacing
+        with storage.scope() as s:
+            kept = s.checkpoint(
+                idx.join(F.broadcast(cur_df), "path", "left_semi"))
+            kept.write.mode("overwrite").parquet(index_path)
     if new_paths:
-        rows = webdataset_index(
+        rows = build_index(
             spark.read.format("binaryFile").load(new_paths)
             .select("path", "content"))
         rows.write.mode("append").parquet(index_path)

@@ -20,6 +20,8 @@ import pandas
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import storage
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -274,12 +276,9 @@ def _kmeans_centroids_ml(df: DataFrame, vec_col: str, n_centroids: int,
     unit = Normalizer(inputCol="__raw", outputCol="features",
                       p=2.0).transform(feats).select("features")
     # KMeans iterates over the features — persist across iterations
-    unit = unit.persist()
-    try:
+    with storage.scope() as s:
         model = KMeans(k=n_centroids, maxIter=iters, seed=seed,
-                       featuresCol="features").fit(unit)
-    finally:
-        unit.unpersist()
+                       featuresCol="features").fit(s.persist(unit))
     out = []
     for c in model.clusterCenters():
         arr = np.asarray(c, dtype=np.float64)

@@ -10,6 +10,8 @@ import pandas  # noqa: F401 — pandas_udf type hints resolve at module scope
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import storage
+
 # marker stopwords per language for the n-gram-free heuristic; chosen to be
 # expressible as one word-boundary regex per language in both Spark and
 # ANSI SQL engines
@@ -575,9 +577,11 @@ def remove_boilerplate_lines(df: DataFrame, id_col: str, text_col: str,
             "spark.deequ.text.boilerplateLocalMaxLines", "4096"))
     if local_max_lines > 0:
         # one pass computes the set either way; checkpoint so the gate
-        # probe and the chosen rebuild both read the materialized rows
-        # (blocks are ContextCleaner-managed — no CacheManager entry)
-        boiler = boiler.localCheckpoint(eager=True)
+        # probe and the chosen rebuild both read the materialized rows.
+        # The returned plan reads it, so it is kept: an enclosing
+        # storage scope frees it, else the ContextCleaner
+        with storage.scope() as s:
+            boiler = s.keep(s.checkpoint(boiler, eager=True))
         if boiler.limit(local_max_lines + 1).count() <= local_max_lines:
             import uuid
             uid = uuid.uuid4().hex[:12]

@@ -544,36 +544,5 @@ def update_cdx_index(spark: SparkSession, index_path: str,
     binaryFile scan over exactly those paths); the ghost rewrite is
     O(index) and happens only when files actually disappeared. Returns
     ``{"known_files": n, "scanned_files": n, "removed_rows": n}``."""
-    from pyspark.errors import AnalysisException
-    files = spark.read.format("binaryFile").load(warc_glob)
-    current = {r["path"] for r in files.select("path").collect()}
-    try:
-        idx = spark.read.parquet(index_path)
-        known_paths = {r["path"] for r in
-                       idx.select("path").distinct().collect()}
-    except AnalysisException:
-        idx, known_paths = None, set()
-    new_paths = sorted(current - known_paths)
-    ghosts = known_paths - current
-    removed = 0
-    if ghosts:
-        # join against the (small, file-count-sized) current-path set —
-        # isin() over a 100k-file archive would inline a plan-sized
-        # literal list; a broadcast semi/anti join stays O(1) plan
-        cur_df = spark.createDataFrame(
-            [(p,) for p in sorted(current)], "path string")
-        removed = idx.join(F.broadcast(cur_df), "path",
-                           "left_anti").count()
-        # localCheckpoint: the overwrite must never lazily read the
-        # directory it is replacing
-        kept = idx.join(F.broadcast(cur_df), "path", "left_semi") \
-            .localCheckpoint(eager=True)
-        kept.write.mode("overwrite").parquet(index_path)
-    if new_paths:
-        rows = warc_cdx_index(
-            spark.read.format("binaryFile").load(new_paths)
-            .select("path", "content"))
-        rows.write.mode("append").parquet(index_path)
-    return {"known_files": len(known_paths) - len(ghosts),
-            "scanned_files": len(new_paths),
-            "removed_rows": removed}
+    from .shards import _update_file_index
+    return _update_file_index(spark, index_path, warc_glob, warc_cdx_index)

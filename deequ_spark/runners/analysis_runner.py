@@ -31,6 +31,7 @@ Execution contract (the engine's scale story):
 
 from __future__ import annotations
 
+import contextvars
 import json
 from dataclasses import dataclass, field
 from typing import Any, Dict, List, Optional, Sequence, Tuple
@@ -40,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import AtomicType, DataType, DoubleType, FloatType
 from pyspark.storagelevel import StorageLevel
 
+from .. import storage
 from ..analyzers.base import Analyzer, ScanShareableAnalyzer, State
 from ..analyzers.grouping import (COUNT_COL, FrequenciesAndNumRows,
                                   FrequencyBasedAnalyzer, Histogram,
@@ -149,7 +151,8 @@ def _run_task_groups(data: DataFrame, tasks: List[Any]) -> AnalyzerContext:
     ``inheritable_thread_target`` so the caller's job group / job
     description / other thread-local properties propagate to the jobs
     the tasks submit (and cancellation via job group still reaches
-    them)."""
+    them), and each task runs in a copy of the caller's context, so its
+    storage scopes nest in the caller's."""
     results = AnalyzerContext()
     max_conc = 3
     try:
@@ -172,7 +175,10 @@ def _run_task_groups(data: DataFrame, tasks: List[Any]) -> AnalyzerContext:
     except Exception:  # noqa: BLE001 — utility unavailable → plain tasks
         wrapped = tasks
     with ThreadPoolExecutor(max_workers=min(max_conc, len(tasks))) as pool:
-        futures = [pool.submit(t) for t in wrapped]
+        # pool threads do not inherit the caller's context: each task
+        # runs in a copy, so it sees the caller's storage scope
+        futures = [pool.submit(contextvars.copy_context().run, t)
+                   for t in wrapped]
         try:
             for fut in futures:
                 results += fut.result()
@@ -194,8 +200,7 @@ def do_analysis_run(data: DataFrame,
                     save_or_append_results_with_key=None,
                     save_states_with=None,
                     aggregate_with=None,
-                    fail_if_results_missing: bool = False,
-                    keep_state_cache: bool = False) -> AnalyzerContext:
+                    fail_if_results_missing: bool = False) -> AnalyzerContext:
     """Compute all metrics with minimal passes (parity:
     AnalysisRunner.scala:101-247). Reuse and save are SEPARATE keys (as in
     the reference): passing a reuse key never writes back — otherwise a
@@ -213,14 +218,13 @@ def do_analysis_run(data: DataFrame,
     state is persisted, and a frequency table is written beside the one
     it was merged from and then swapped in.
 
-    ``keep_state_cache=True`` (r12 perf) leaves DataFrame-valued states
-    (grouping frequency tables) CACHED when they are saved into
-    ``save_states_with`` — the caller owns the cache and must unpersist
-    via the state's ``frequencies`` once merged/consumed. Without it a
-    saved frequency state is a lazy plan whose every later merge
-    re-runs the batch groupBy (measured: the streaming path paid the
-    shuffle twice per micro-batch). Default False keeps the no-leak
-    contract for everyone else."""
+    Saved frequency tables (the DataFrame-valued states of grouping
+    analyzers and Histograms) stay cached exactly when the caller has a
+    ``storage.scope()`` open: the scope then owns them and frees them on
+    exit, so a merge inside it reads the cache instead of re-running the
+    GROUP BY. Without an open scope a saved frequency state is a lazy
+    plan and the run leaves no cache behind. The ``aggregate_with`` path
+    opens a scope around the delta run and the merge."""
     analyzers = _dedup(analyzers)
     if not analyzers:
         return AnalyzerContext()
@@ -230,14 +234,11 @@ def do_analysis_run(data: DataFrame,
         delta_states = InMemoryStateProvider()
         # the delta's frequency tables stay cached through the merge,
         # which reads each of them twice (metric, then persist)
-        do_analysis_run(data, analyzers, save_states_with=delta_states,
-                        keep_state_cache=True)
-        try:
+        with storage.scope():
+            do_analysis_run(data, analyzers, save_states_with=delta_states)
             ctx = run_on_aggregated_states(
                 data, analyzers, [aggregate_with, delta_states],
                 save_states_with=save_states_with)
-        finally:
-            delta_states.unpersist()
         if metrics_repository is not None and save_or_append_results_with_key is not None:
             metrics_repository.save(save_or_append_results_with_key, ctx)
         return ctx
@@ -348,7 +349,7 @@ def do_analysis_run(data: DataFrame,
     for (_, where), members in groups.items():
         tasks.append(lambda m=members, w=where: _run_frequency_group(
             data, list(m[0].grouping_columns), w, m, run_standalone,
-            save_states_with, keep_state_cache))
+            save_states_with))
     for a in others:
         tasks.append(lambda a=a: run_standalone(a))
     task_results = _run_task_groups(data, tasks).metric_map
@@ -472,8 +473,7 @@ def _run_frequency_group(data: DataFrame,
                          where: Optional[str],
                          members: List[FrequencyBasedAnalyzer],
                          run_standalone,
-                         save_states_with=None,
-                         keep_state_cache: bool = False) -> AnalyzerContext:
+                         save_states_with=None) -> AnalyzerContext:
     """ONE GROUP BY serves every member of one (columns, where) group
     (AnalysisRunner.scala:560-628). With grouping analyzers it is the
     null-inclusive table: they read it minus the all-null-key group,
@@ -481,9 +481,9 @@ def _run_frequency_group(data: DataFrame,
     and Histograms read its string-cast regrouping. Histograms alone
     share the first one's own string GROUP BY. A table is persisted when
     more than one job reads it; a view over a table cached here is
-    persisted only when, under ``keep_state_cache``, it is a saved
-    state's ``frequencies`` and so must outlive the group. Caches are
-    released on exit, except those.
+    persisted only when it is a saved state's ``frequencies`` that the
+    caller's storage scope keeps. The group's scope frees every other
+    cache on exit.
 
     Failures: grouping analyzers keep the reference's all-fail contract
     (AnalysisTest.scala:342-365, 398-427), isolating per analyzer only
@@ -496,26 +496,27 @@ def _run_frequency_group(data: DataFrame,
                  if isinstance(a, ScanShareableFrequencyBasedAnalyzer)]
     rest = [a for a in bucket if a not in shareable]
     saving = save_states_with is not None
-    keep = keep_state_cache and saving
-    cached: List[DataFrame] = []
-    kept: List[DataFrame] = []
+    with storage.scope() as s:
+        keep = saving and s.nested
+        cached = False
 
-    def persisted(df: DataFrame, readers: int) -> DataFrame:
-        # once a table is cached here, every later one is a view over it
-        # whose readers re-read that cache: cached only to be kept
-        if readers <= 1 or (cached and not keep):
-            return df
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        cached.append(df)
-        return df
+        def persisted(df: DataFrame, readers: int) -> DataFrame:
+            # once a table is cached here, every later one is a view
+            # over it whose readers re-read that cache: cached only to
+            # be kept
+            nonlocal cached
+            if readers <= 1 or (cached and not keep):
+                return df
+            cached = True
+            return s.persist(df, StorageLevel.MEMORY_AND_DISK)
 
-    def save(analyzers, state) -> None:
-        if saving:
-            for a in analyzers:
-                save_states_with.persist(a, state)
-            kept.append(state.frequencies)
+        def save(analyzers, state) -> None:
+            if saving:
+                for a in analyzers:
+                    save_states_with.persist(a, state)
+                if keep:
+                    s.keep(state.frequencies)
 
-    try:
         try:
             if bucket:
                 table = persisted(frequencies_plan_all(
@@ -552,10 +553,6 @@ def _run_frequency_group(data: DataFrame,
                     pass
                 ctx += run_standalone(h)
         return ctx
-    finally:
-        for df in cached:
-            if not (keep_state_cache and any(df is k for k in kept)):
-                df.unpersist()
 
 
 def _run_grouping_analyzers(data: DataFrame, frequencies: DataFrame,

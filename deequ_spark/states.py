@@ -47,15 +47,6 @@ class InMemoryStateProvider(StateProvider):
     def load(self, analyzer: Analyzer) -> Optional[State]:
         return self._states.get(analyzer)
 
-    def unpersist(self) -> None:
-        """Release the cached frequency tables of the held states — the
-        caches ``do_analysis_run(keep_state_cache=True)`` leaves to its
-        caller."""
-        for state in self._states.values():
-            freq = getattr(state, "frequencies", None)
-            if freq is not None:
-                freq.unpersist()
-
 
 _SCALAR_STATES = {
     "NumMatches": B.NumMatches,

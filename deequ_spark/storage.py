@@ -1,19 +1,37 @@
-"""Executor-storage hygiene helpers for checkpointed DataFrames.
+"""Executor storage: one owner for every cached or checkpointed frame.
 
-``DataFrame.unpersist()`` only drops CacheManager entries (frames the
-caller ``persist()``-ed). A ``localCheckpoint(eager=True)`` frame holds
-its rows as RDD storage blocks owned by the ``LogicalRDD`` at the root
-of the checkpointed plan; those blocks are NOT cache-manager entries,
-so ``unpersist()`` is a no-op for them and they otherwise live until
-the ContextCleaner notices the RDD became garbage — unbounded latency
-under driver memory pressure. Reaching through the analyzed plan to
-the underlying RDD releases the blocks immediately (verified against
-``SparkContext.getRDDStorageInfo`` — see tests/test_r13_storage.py).
+Every materialization in this package goes through a ``scope()``::
+
+    with storage.scope() as s:
+        table = s.persist(df)          # owned; an already cached df is not
+        ck = s.checkpoint(plan)        # localCheckpoint, owned
+        s.release(table)               # superseded: free it now
+        return s.keep(ck)              # outlives the block
+
+A scope owns the frames its ``persist`` and ``checkpoint`` create and
+frees them on exit, whether the block succeeded or raised. ``keep``
+hands an owned frame to the enclosing scope, which frees it when it
+exits, or — with none open — to the caller, who releases it with
+``release_checkpoint``. ``nested`` tells whether a kept frame has such
+an owner; the analysis runner keeps saved frequency tables cached
+exactly then. The open scopes form a stack in a ``ContextVar``; pool
+threads do not inherit it, so the runner submits each task under
+``contextvars.copy_context()`` and the task's scopes nest in the
+caller's.
+
+A checkpoint's rows are RDD blocks of the ``LogicalRDD`` at its plan
+root, not CacheManager entries: ``unpersist()`` cannot free them and
+they otherwise wait for the ContextCleaner. ``release_checkpoint``
+reaches the RDD and frees them now (tests/test_r13_storage.py).
 """
 
 from __future__ import annotations
 
+from contextvars import ContextVar
+from typing import Dict, Optional, Tuple
+
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
 
 
 def checkpoint_materialized(df: DataFrame) -> bool:
@@ -34,20 +52,12 @@ def checkpoint_materialized(df: DataFrame) -> bool:
 
 
 def release_checkpoint(df: DataFrame) -> None:
-    """Free a superseded DataFrame's storage NOW, best effort.
-
-    Handles both kinds of retained storage:
-
-    * a ``localCheckpoint``-ed frame (plan root is a ``LogicalRDD``):
-      unpersist the underlying RDD's blocks directly;
-    * a ``persist()``-ed frame: plain ``unpersist()`` drops the
-      CacheManager entry.
-
-    Callers must guarantee nothing will read the frame again — every
-    downstream consumer either finished or reads a NEWER materialized
-    frame. Any JVM-shape mismatch degrades to ``unpersist()`` (the old
-    ContextCleaner-eventual behavior), never an error.
-    """
+    """Free a superseded DataFrame's storage NOW, best effort: a
+    ``localCheckpoint``-ed frame (plan root is a ``LogicalRDD``) through
+    the underlying RDD's blocks, any other frame through ``unpersist()``
+    (which also drops a ``persist()``-ed frame's CacheManager entry).
+    Nothing may read the frame again. A JVM-shape mismatch degrades to
+    ``unpersist()``, never an error."""
     released = False
     try:
         plan = df._jdf.queryExecution().analyzed()
@@ -61,3 +71,72 @@ def release_checkpoint(df: DataFrame) -> None:
             df.unpersist()
         except Exception:  # noqa: BLE001 — best effort only
             pass
+
+
+_CURRENT: ContextVar[Optional["Scope"]] = ContextVar(
+    "deequ_spark_storage_scope", default=None)
+
+
+class Scope:
+    """The frames one ``with scope()`` block owns (see the module doc)."""
+
+    def __init__(self):
+        self._parent: Optional[Scope] = None
+        # id(frame) -> (frame, persisted)
+        self._owned: Dict[int, Tuple[DataFrame, bool]] = {}
+
+    @property
+    def nested(self) -> bool:
+        return self._parent is not None
+
+    def persist(self, df: DataFrame,
+                level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER
+                ) -> DataFrame:
+        current = df.storageLevel
+        if current.useMemory or current.useDisk:
+            return df
+        df = df.persist(level)
+        self._owned[id(df)] = (df, True)
+        return df
+
+    def checkpoint(self, df: DataFrame, eager: bool = True) -> DataFrame:
+        df = df.localCheckpoint(eager=eager)
+        self._owned[id(df)] = (df, False)
+        return df
+
+    def release(self, df: DataFrame) -> None:
+        _, persisted = self._owned.pop(id(df), (df, False))
+        _free(df, persisted)
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        entry = self._owned.pop(id(df), None)
+        if entry is not None and self._parent is not None:
+            self._parent._owned[id(df)] = entry
+        return df
+
+    def __enter__(self) -> "Scope":
+        self._parent = _CURRENT.get()
+        self._token = _CURRENT.set(self)
+        return self
+
+    def __exit__(self, *exc) -> None:
+        _CURRENT.reset(self._token)
+        for df, persisted in reversed(list(self._owned.values())):
+            _free(df, persisted)
+        self._owned = {}
+
+
+scope = Scope
+
+
+def _free(df: DataFrame, persisted: bool) -> None:
+    if not persisted:
+        release_checkpoint(df)
+        return
+    # unpersist(), not release_checkpoint: a cached checkpoint (e.g. a
+    # streaming state's) shares the checkpoint's LogicalRDD root, whose
+    # blocks must survive the cache
+    try:
+        df.unpersist()
+    except Exception:  # noqa: BLE001 — best effort only
+        pass

@@ -1185,6 +1185,42 @@ class TestDuplicateSpanRemoval:
         # shorter than n -> no windows, untouched
         assert out[5]["deduped"] == "short"
 
+    @pytest.mark.parametrize("key,n", [("hash", 4), ("text", 4),
+                                       ("hash", 17)])
+    def test_caller_columns_named_like_temp_columns(self, spark, key, n):
+        """Caller columns named like the operator's internal columns
+        (``__toks``, ``__did``, the lambda-barrier ``__seg`` that n=17
+        creates) pass through unchanged, and ``deduped`` equals the run
+        without them."""
+        from deequ_spark.llm import duplicate_span_removal
+        filler = " ".join(f"f{i}" for i in range(20))
+        corpus = self.CORPUS + [(6, filler + " a"), (7, "b " + filler)]
+        plain = spark.createDataFrame(corpus, "id long, text string")
+        extra = spark.createDataFrame(
+            [(i, t, f"toks{i}", -i, f"seg{i}") for i, t in corpus],
+            "id long, text string, __toks string, __did long, "
+            "__seg string")
+        want = {r["id"]: r["deduped"] for r in duplicate_span_removal(
+            plain, "id", "text", n=n, key=key).collect()}
+        got = duplicate_span_removal(extra, "id", "text", n=n,
+                                     key=key).collect()
+        assert {r["id"]: r["deduped"] for r in got} == want
+        for r in got:
+            assert (r["__toks"], r["__did"], r["__seg"]) == \
+                (f"toks{r['id']}", -r["id"], f"seg{r['id']}")
+
+    def test_null_ids_dropped_and_never_counted(self, spark):
+        """Ids must be non-null: a NULL-id row is dropped from the output
+        and its windows do not make another document's window a
+        repeat."""
+        from deequ_spark.llm import duplicate_span_removal
+        df = spark.createDataFrame(
+            [(1, "a b c d x"), (None, "a b c d y")],
+            "id long, text string")
+        out = duplicate_span_removal(df, "id", "text", n=4).collect()
+        assert [(r["id"], r["deduped"], r["n_removed_tokens"])
+                for r in out] == [(1, "a b c d x", 0)]
+
     def test_overlapping_spans_merge(self, spark):
         from deequ_spark.llm import duplicate_span_removal
         # doc 2 repeats a 5-token run; its two duplicated 4-gram windows
