@@ -12,17 +12,21 @@ manufactured a phantom +124% regression in r5 (session noise is ±30%);
 medians with min/max spread make round-over-round comparison trustworthy.
 
 Workloads mirror BASELINE.md §2 (B1 scan-fused suite, B2 grouping suite,
-B5 row-level) plus the e2e verification path.
+B5 row-level) plus the e2e verification path. ``session(app)`` and
+``workloads(spark)`` (over ``fixtures``) are the one session and
+workload table that ``main()``, ``tools/ab.py`` and
+``tools/plan_sweep.py`` share.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
-import sys
+import shutil
+import statistics
+import tempfile
 import time
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -161,11 +165,9 @@ def b11_embedding_near_dup(spark, emb):
 
 def prepare_stream_source(spark, sf_dir):
     """One-time source-data layout for b12 — file IO, not the workload."""
-    import shutil
-    src = "/tmp/deequ_bench_stream"
-    shutil.rmtree(src, ignore_errors=True)
+    src = tempfile.mkdtemp(prefix="deequ_bench_stream_")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    orders.repartition(4).write.parquet(src)
+    orders.repartition(4).write.mode("overwrite").parquet(src)
     return src
 
 
@@ -281,8 +283,6 @@ def b21_rolling_stats(spark, ev):
 def prepare_dedup_index(spark, docs):
     """One-time setup for B22 (index build is the write path, measured
     separately by tools/scale_check.py; B22 times CLASSIFY only)."""
-    import tempfile
-
     from deequ_spark.llm import write_dedup_index
     path = tempfile.mkdtemp(prefix="deequ_bench_idx_")
     write_dedup_index(docs, "doc_id", "text", path)
@@ -335,8 +335,6 @@ def prepare_warc_dir(spark, docs, n_files=32):
     parallel (one applyInPandas group per file — the shards.py writer
     pattern). This is the fixture a crawl-ingest bench reads back; the
     build itself is not timed."""
-    import tempfile
-
     from deequ_spark.llm.warc import build_warc_file, build_warc_record
     path = tempfile.mkdtemp(prefix="deequ_bench_warc_")
 
@@ -369,6 +367,7 @@ def b24_crawl_ingest(spark, warc_dir):
     spends its first day; the WARC read itself is map-only, so the
     first shuffle this pays is the pipeline's own exact-dedup."""
     from deequ_spark.llm.warc import crawl_to_corpus
+    from deequ_spark.storage import release_checkpoint
     # quality_filter off: the synthetic corpus is stopword-free word
     # salad and the Gopher heuristics would (correctly) drop all of it;
     # ingest + boilerplate + exact/near dedup + chunking is the path
@@ -376,7 +375,10 @@ def b24_crawl_ingest(spark, warc_dir):
     chunks, _ = crawl_to_corpus(spark, warc_dir, source="wet",
                                 min_words=20, quality_filter=False,
                                 collect_stats=False)
-    return chunks.count()
+    n = chunks.count()
+    # the returned corpus is a localCheckpoint: unpersist() cannot free it
+    release_checkpoint(chunks)
+    return n
 
 
 def b25_fuzzy_join(spark, cust):
@@ -393,8 +395,6 @@ def b26_zorder_cluster(spark, orders):
     repartitionByRange shuffle + task-local sort, written out (the
     write IS the workload: clustering is a layout job whose payoff is
     every later pruned scan)."""
-    import shutil
-    import tempfile
     from deequ_spark.layout import cluster_by_zorder
     out = cluster_by_zorder(orders, ["o_custkey", "o_totalprice"],
                             bits=16, num_partitions=32)
@@ -419,6 +419,7 @@ def b27_pipeline_chain(spark, docs, emb):
     materialized rows instead of re-deriving the upstream subtree
     (tools/AB_B27_NOTE.md has the with/without measurements)."""
     from deequ_spark.llm import prepare_training_corpus
+    from deequ_spark.storage import release_checkpoint
     out, _ = prepare_training_corpus(
         docs, "doc_id", "text",
         min_words=20, boilerplate_min_docs=2,
@@ -431,7 +432,7 @@ def b27_pipeline_chain(spark, docs, emb):
         collect_stats=False,
         gopher_kwargs={"min_stopword_hits": 1})
     n = out.count()
-    out.unpersist()
+    release_checkpoint(out)
     return n
 
 
@@ -453,29 +454,73 @@ def b28_bloom_join(spark, lineitem, orders):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def main():
+def session(app):
+    """The bench's Spark session: local[$SPARK_GRAFT_CPUS], AQE on, no UI
+    or progress bars, $SPARK_GRAFT_DRIVER_MEM (default 8g) of heap."""
     spark = (SparkSession.builder
              .master(f"local[{CPUS}]")
-             .appName("deequ-spark-bench")
+             .appName(app)
              .config("spark.sql.shuffle.partitions", CPUS)
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.ui.enabled", "false")
              .config("spark.ui.showConsoleProgress", "false")
-             .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+             .config("spark.driver.memory",
+                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
              .config("spark.sql.legacy.parquet.nanosAsLong", "true")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
-    lineitem = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    cust = spark.read.parquet(f"{SF_DIR}/customer.parquet")
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    # warm the JVM + file listing once
-    lineitem.count(); orders.count(); docs.count(); emb.count()
+
+# name -> (workload, the fixtures it takes after `spark`), in run order
+WORKLOADS = {
+    "b1_scan_fused": (b1_scan_fused, ("lineitem",)),
+    "b2_grouping": (b2_grouping, ("orders",)),
+    "b3_verification": (b3_verification, ("lineitem",)),
+    "b4_histogram_entropy": (b4_histogram_entropy, ("lineitem",)),
+    "b5_row_level": (b5_row_level, ("lineitem",)),
+    "b6_dedup_lsh": (b6_dedup_lsh, ("docs",)),
+    "b7_ann": (b7_ann, ("emb",)),
+    "b8_text_analysis": (b8_text_analysis, ("docs",)),
+    "b9_multimodal": (b9_multimodal, ("docs",)),
+    "b10_kll": (b10_kll, ("lineitem",)),
+    "b11_embedding_near_dup": (b11_embedding_near_dup, ("emb",)),
+    "b12_streaming": (b12_streaming, ("sf_dir", "stream_src")),
+    "b13_profile": (b13_profile, ("sf_dir",)),
+    "b14_incremental": (b14_incremental, ("lineitem",)),
+    "b15_sequence_packing": (b15_sequence_packing, ("docs",)),
+    "b16_bm25_search": (b16_bm25_search, ("docs",)),
+    "b17_span_dedup": (b17_span_dedup, ("docs",)),
+    "b18_semantic_dedup": (b18_semantic_dedup, ("emb",)),
+    "b19_asof_join": (b19_asof_join, ("events",)),
+    "b20_interval_join": (b20_interval_join, ("events",)),
+    "b21_rolling_stats": (b21_rolling_stats, ("events",)),
+    "b22_incremental_dedup": (b22_incremental_dedup, ("dedup_index",)),
+    "b23_image_phash": (b23_image_phash, ("images",)),
+    "b24_crawl_ingest": (b24_crawl_ingest, ("warc_dir",)),
+    "b25_fuzzy_join": (b25_fuzzy_join, ("cust",)),
+    "b26_zorder_cluster": (b26_zorder_cluster, ("orders",)),
+    "b27_pipeline_chain": (b27_pipeline_chain, ("docs", "emb")),
+    "b28_bloom_join": (b28_bloom_join, ("lineitem", "orders")),
+}
+
+_TABLES = {"lineitem": "lineitem", "orders": "orders", "cust": "customer",
+           "docs": "documents", "emb": "embeddings"}
+
+
+def fixtures(spark, needed):
+    """``(fixtures, cleanup)``: the tables, read and counted once (JVM and
+    file listing warm), with the Python/Arrow worker pool warmed, plus
+    each written fixture named in ``needed`` (stream source, events,
+    dedup index, images, WARC files). ``cleanup()`` frees the cached
+    fixtures and deletes the written ones."""
+    fx = {"sf_dir": SF_DIR}
+    for key, table in _TABLES.items():
+        fx[key] = spark.read.parquet(f"{SF_DIR}/{table}.parquet")
+    for key in ("lineitem", "orders", "docs", "emb"):
+        fx[key].count()
     # warm the Python/Arrow worker pool once (first pandas_udf stage pays
     # ~1-2s of worker spawn — startup cost, not workload cost)
-    from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -487,61 +532,61 @@ def main():
     n_workers = int(CPUS) if str(CPUS).isdigit() else 32
     spark.range(0, n_workers * 100, 1, n_workers) \
         .select(_warm(F.col("id").cast("double"))).count()
-    stream_src = prepare_stream_source(spark, SF_DIR)
-    from deequ_spark.sources import load_table
-    events = load_table(spark, SF_DIR, "events").cache()
-    events.count()
-    idx_pair = prepare_dedup_index(spark, docs)
-    images = prepare_images(spark)
-    warc_dir = prepare_warc_dir(spark, docs)
 
-    benches = [
-        ("b1_scan_fused", lambda: b1_scan_fused(spark, lineitem)),
-        ("b2_grouping", lambda: b2_grouping(spark, orders)),
-        ("b3_verification", lambda: b3_verification(spark, lineitem)),
-        ("b4_histogram_entropy", lambda: b4_histogram_entropy(spark, lineitem)),
-        ("b5_row_level", lambda: b5_row_level(spark, lineitem)),
-        ("b6_dedup_lsh", lambda: b6_dedup_lsh(spark, docs)),
-        ("b7_ann", lambda: b7_ann(spark, emb)),
-        ("b8_text_analysis", lambda: b8_text_analysis(spark, docs)),
-        ("b9_multimodal", lambda: b9_multimodal(spark, docs)),
-        ("b10_kll", lambda: b10_kll(spark, lineitem)),
-        ("b11_embedding_near_dup", lambda: b11_embedding_near_dup(spark, emb)),
-        ("b12_streaming", lambda: b12_streaming(spark, SF_DIR, stream_src)),
-        ("b13_profile", lambda: b13_profile(spark, SF_DIR)),
-        ("b14_incremental", lambda: b14_incremental(spark, lineitem)),
-        ("b15_sequence_packing", lambda: b15_sequence_packing(spark, docs)),
-        ("b16_bm25_search", lambda: b16_bm25_search(spark, docs)),
-        ("b17_span_dedup", lambda: b17_span_dedup(spark, docs)),
-        ("b18_semantic_dedup", lambda: b18_semantic_dedup(spark, emb)),
-        ("b19_asof_join", lambda: b19_asof_join(spark, events)),
-        ("b20_interval_join", lambda: b20_interval_join(spark, events)),
-        ("b21_rolling_stats", lambda: b21_rolling_stats(spark, events)),
-        ("b22_incremental_dedup",
-         lambda: b22_incremental_dedup(spark, idx_pair)),
-        ("b23_image_phash", lambda: b23_image_phash(spark, images)),
-        ("b24_crawl_ingest", lambda: b24_crawl_ingest(spark, warc_dir)),
-        ("b25_fuzzy_join", lambda: b25_fuzzy_join(spark, cust)),
-        ("b26_zorder_cluster", lambda: b26_zorder_cluster(spark, orders)),
-        ("b27_pipeline_chain", lambda: b27_pipeline_chain(spark, docs, emb)),
-        ("b28_bloom_join", lambda: b28_bloom_join(spark, lineitem, orders)),
-    ]
-    # Dev-only subset filter for targeted same-session ABs (e.g.
-    # tools/ab_r12_opt.py): unset (the driver's case) = all workloads,
-    # so the driver contract and its timings are untouched.
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:
-        keep = {w.strip() for w in only.split(",") if w.strip()}
-        benches = [(n, f) for n, f in benches if n in keep]
+    dirs, cached = [], []
+    if "stream_src" in needed:
+        fx["stream_src"] = prepare_stream_source(spark, SF_DIR)
+        dirs.append(fx["stream_src"])
+    if "events" in needed:
+        from deequ_spark.sources import load_table
+        fx["events"] = load_table(spark, SF_DIR, "events").cache()
+        fx["events"].count()
+        cached.append(fx["events"])
+    if "dedup_index" in needed:
+        fx["dedup_index"] = prepare_dedup_index(spark, fx["docs"])
+        dirs.append(fx["dedup_index"][0])
+        cached.append(fx["dedup_index"][1])
+    if "images" in needed:
+        fx["images"] = prepare_images(spark)
+        cached.append(fx["images"])
+    if "warc_dir" in needed:
+        fx["warc_dir"] = prepare_warc_dir(spark, fx["docs"])
+        dirs.append(fx["warc_dir"])
+
+    def cleanup():
+        for df in cached:
+            df.unpersist()
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
+
+    return fx, cleanup
+
+
+def workloads(spark, only=None):
+    """``({name: zero-argument callable}, cleanup)`` for the workloads
+    named in ``only`` (default: all, in table order), over the untimed
+    ``fixtures`` they take; ``cleanup()`` is that of the fixtures."""
+    names = list(WORKLOADS) if only is None else list(only)
+    unknown = sorted(set(names) - set(WORKLOADS))
+    if unknown:
+        raise ValueError(f"unknown workloads: {unknown}")
+    fx, cleanup = fixtures(spark, {f for n in names for f in WORKLOADS[n][1]})
+    return {n: functools.partial(WORKLOADS[n][0], spark,
+                                 *(fx[f] for f in WORKLOADS[n][1]))
+            for n in names}, cleanup
+
+
+def main():
+    spark = session("deequ-spark-bench")
+    benches, cleanup = workloads(spark)
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    samples = {name: [] for name, _ in benches}
+    samples = {name: [] for name in benches}
     for _ in range(n_runs):
-        for name, fn in benches:
+        for name, fn in benches.items():
             t0 = time.perf_counter()
             fn()
             samples[name].append(round(time.perf_counter() - t0, 3))
 
-    import statistics
     timings = {n: round(statistics.median(s), 3) for n, s in samples.items()}
     spread = {n: {"min": min(s), "max": max(s)} for n, s in samples.items()}
 
@@ -551,11 +596,8 @@ def main():
     # bars) can print after the result line: the round driver keeps
     # only the TAIL of stdout, so the one-line compact JSON must be
     # the LAST bytes written (r10 lost the b1-b3 medians to this).
+    cleanup()
     spark.stop()
-    import shutil
-    shutil.rmtree(idx_pair[0], ignore_errors=True)
-    shutil.rmtree(warc_dir, ignore_errors=True)
-    import sys
     # per-sample spread on its own earlier line keeps the final
     # contract line short enough to survive any tail window
     print("SPREAD " + json.dumps({"spread": spread, "runs": n_runs}),
@@ -567,7 +609,6 @@ def main():
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }), flush=True)
-    sys.stdout.flush()
 
 
 if __name__ == "__main__":

@@ -526,7 +526,7 @@ def dedup_against_index(new_df: DataFrame, id_col: str, text_col: str,
             F.lit(False)))
         # materialize the bloom-positive SLIVER once (it is small by
         # construction — that is the point of the filter). Two reasons,
-        # both measured (r12 AB, tools/ab_b22_b27_r12.py): (1) `exact`
+        # both measured (r12 AB, OPTIMIZATION_r12.md "b22"): (1) `exact`
         # below is referenced twice (duplicates union + near-path
         # anti-join) and the probed subtree defeated exchange reuse —
         # the whole probe+join+groupBy executed TWICE (13 exchanges vs

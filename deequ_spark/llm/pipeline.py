@@ -28,7 +28,6 @@ paying their own (``collect_stats=False`` only skips the count jobs).
 
 from __future__ import annotations
 
-import contextlib
 from typing import Dict, Optional, Tuple
 
 from pyspark.sql import DataFrame
@@ -62,7 +61,6 @@ def prepare_training_corpus(df: DataFrame, id_col: str, text_col: str,
                             sample_fraction: Optional[float] = None,
                             pack_budget: Optional[int] = None,
                             collect_stats: bool = True,
-                            checkpoint_stages: bool = True,
                             checkpoint_input: bool = False,
                             gopher_kwargs: Optional[dict] = None,
                             paragraph_dedup_sep: Optional[str] = None,
@@ -115,13 +113,6 @@ def prepare_training_corpus(df: DataFrame, id_col: str, text_col: str,
     DSIR importance resampling toward the target corpus (runs after
     the quality/dedup stages so weights are fit on clean text).
 
-    ``checkpoint_stages=False`` disables the per-stage localCheckpoint
-    cuts — ONLY safe for short chains without self-referencing stages
-    (near/semantic dedup, LM filter, DSIR each reference the running
-    frame 2-3 times; without cuts the logical plan grows
-    multiplicatively and every reference RECOMPUTES the upstream
-    subtree — tools/AB_B27_NOTE.md has the measurements).
-
     ``checkpoint_input=True`` additionally lets the FIRST
     multi-referencing stage cut even when no transform has run yet.
     Default off: for a re-scannable source (parquet) the extra
@@ -153,11 +144,7 @@ def prepare_training_corpus(df: DataFrame, id_col: str, text_col: str,
     # every cut, and every checkpoint a stage keeps (minhash verified
     # pairs, semantic-dedup losers, the boilerplate set), belongs to
     # this scope, which frees them on exit — all but the returned cut.
-    # Without cuts the returned frame is a lazy plan that still reads
-    # those checkpoints, so no scope is opened and they go to the
-    # caller.
-    with (storage.scope() if checkpoint_stages
-          else contextlib.nullcontext()) as s:
+    with storage.scope() as s:
         # localCheckpoint placement (r12, guide §2.4/§1.2): cuts happen at
         # the INPUT of every stage that references the running frame more
         # than once (boilerplate, paragraph/span dedup, exact/near/semantic
@@ -169,7 +156,7 @@ def prepare_training_corpus(df: DataFrame, id_col: str, text_col: str,
         # now fuse into the next materialization instead of paying their
         # own. Measured on the bench chain: 7 cuts → 5, ~1.5 s less
         # materialization per run, byte-identical output
-        # (tools/profile_pipeline_r12.py). `dirty` tracks whether any
+        # (OPTIMIZATION_r12.md, "b27 / b24"). `dirty` tracks whether any
         # transform has been applied since the last cut, so the FIRST
         # multi-ref stage straight off the raw source skips the cut — the
         # raw input is usually a cheap re-scannable projection, and
@@ -207,7 +194,7 @@ def prepare_training_corpus(df: DataFrame, id_col: str, text_col: str,
             successor has materialized (``checkpoint_materialized``:
             the successor's first job still reads the old blocks); the
             chain's scope frees the rest on exit."""
-            if state["dirty"] and checkpoint_stages:
+            if state["dirty"]:
                 frame = s.checkpoint(frame, eager=eager)
                 state.setdefault("cuts", []).append(frame)
                 sweep_cuts()
@@ -384,4 +371,4 @@ def prepare_training_corpus(df: DataFrame, id_col: str, text_col: str,
         # superseded cuts and the stages' checkpoints — executor storage
         # ends the call holding ONE corpus copy, the returned frame.
         out = cut_in(out, eager=True)
-        return (s.keep(out) if s else out), stats
+        return s.keep(out), stats

@@ -544,7 +544,7 @@ def remove_boilerplate_lines(df: DataFrame, id_col: str, text_col: str,
     wave 3: the join rebuild re-shuffled EVERY line of the corpus
     through a groupBy(id) just to reassemble text the filter form
     rewrites in place; measured 2x on the rebuild leg at sf0.1
-    — 0.88 s -> 0.44 s median, tools/profile_wave3_r12.py — and the
+    — 0.88 s -> 0.44 s median, OPTIMIZATION_r12.md "Wave 3" — and the
     plan drops from 3 scans + 2 joins + 5 exchanges to 1 scan + 1
     project, value-identical). When the set exceeds ``local_max_lines``
     (argument, or ``spark.deequ.text.boilerplateLocalMaxLines``,

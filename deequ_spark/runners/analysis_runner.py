@@ -134,6 +134,9 @@ class _LockingStateProvider:
             return self._inner.load(analyzer)
 
 
+_MAX_CONCURRENT_GROUPS = 3
+
+
 def _run_task_groups(data: DataFrame, tasks: List[Any]) -> AnalyzerContext:
     """Execute the runner's independent per-group actions, overlapped.
 
@@ -144,23 +147,18 @@ def _run_task_groups(data: DataFrame, tasks: List[Any]) -> AnalyzerContext:
     another group's straggler tail (guide §2.6 — actions are only
     sequential because the driver calls them sequentially); results
     merge in SUBMISSION order, so the metric map is identical to a
-    sequential run, value for value and key-order included.
-    ``spark.deequ.runner.maxConcurrentGroups`` (default 3, guide §2.6:
-    "2-3 jobs in flight is plenty") bounds in-flight actions; ≤1 runs
-    sequentially in the calling thread. Pool threads run under
+    sequential run, value for value and key-order included. At most
+    ``_MAX_CONCURRENT_GROUPS`` actions are in flight (guide §2.6: "2-3
+    jobs in flight is plenty"; a sequential pool was slower on every
+    workload, tools/AB_R12_WAVE4.json); a single task runs in the
+    calling thread. Pool threads run under
     ``inheritable_thread_target`` so the caller's job group / job
     description / other thread-local properties propagate to the jobs
     the tasks submit (and cancellation via job group still reaches
     them), and each task runs in a copy of the caller's context, so its
     storage scopes nest in the caller's."""
     results = AnalyzerContext()
-    max_conc = 3
-    try:
-        max_conc = int(data.sparkSession.conf.get(
-            "spark.deequ.runner.maxConcurrentGroups", "3"))
-    except Exception:  # noqa: BLE001 — conf unreadable → default
-        pass
-    if len(tasks) <= 1 or max_conc <= 1:
+    if len(tasks) <= 1:
         for t in tasks:
             results += t()
         return results
@@ -174,7 +172,8 @@ def _run_task_groups(data: DataFrame, tasks: List[Any]) -> AnalyzerContext:
         wrapped = [deco(t) for t in tasks]
     except Exception:  # noqa: BLE001 — utility unavailable → plain tasks
         wrapped = tasks
-    with ThreadPoolExecutor(max_workers=min(max_conc, len(tasks))) as pool:
+    with ThreadPoolExecutor(
+            max_workers=min(_MAX_CONCURRENT_GROUPS, len(tasks))) as pool:
         # pool threads do not inherit the caller's context: each task
         # runs in a copy, so it sees the caller's storage scope
         futures = [pool.submit(contextvars.copy_context().run, t)
@@ -301,10 +300,9 @@ def do_analysis_run(data: DataFrame,
     # code calls them sequentially). They are built as task closures
     # and submitted from a small thread pool; each task touches a
     # DISJOINT set of analyzers and returns its own AnalyzerContext.
-    # `spark.deequ.runner.maxConcurrentGroups` bounds the in-flight
-    # actions (guide: 2-3 in flight is plenty — enough to back-fill a
-    # tail, not enough to fight for executors); 1 restores fully
-    # sequential submission.
+    # `_MAX_CONCURRENT_GROUPS` bounds the in-flight actions (guide: 2-3
+    # in flight is plenty — enough to back-fill a tail, not enough to
+    # fight for executors).
     def run_klls() -> AnalyzerContext:
         # ONE extra Arrow pass for ALL KLL columns combined
         # (parity: KLLRunner.computeKLLSketchesInExtraPass, :162-167)

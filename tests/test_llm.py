@@ -2829,28 +2829,6 @@ class TestLmQualityScore:
 
 
 class TestPipelineCheckpointKnob:
-    def test_uncut_chain_equals_cut_chain(self, spark):
-        """checkpoint_stages=False must produce the identical output
-        (the cuts are plan surgery, never semantics) — verified on a
-        short chain where the uncut plan stays analyzable."""
-        from deequ_spark.llm import prepare_training_corpus
-        rows = [(i, "the quick brown fox jumps over the lazy dog plus "
-                 + ("unique words " * (1 + i % 3)) + str(i % 5))
-                for i in range(40)]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        outs = {}
-        for cp in (True, False):
-            out, stats = prepare_training_corpus(
-                df, "doc_id", "text", min_words=3,
-                boilerplate_min_docs=50, near_dedup=False,
-                chunk_tokens=8, chunk_overlap=2,
-                checkpoint_stages=cp,
-                gopher_kwargs={"min_stopword_hits": 1})
-            outs[cp] = sorted(tuple(r) for r in out.collect())
-            if cp:
-                out.unpersist()
-        assert outs[True] == outs[False]
-
     def test_checkpoint_input_cuts_raw_source_once(self, spark):
         """r12 wave 3: checkpoint_input=True lets the FIRST multi-ref
         stage cut the raw source (one extra localCheckpoint, exactly),

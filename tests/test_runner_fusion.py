@@ -252,58 +252,37 @@ class TestConcurrentGroups:
                 Uniqueness(("att1", "att2")),                 # bucket 2
                 Histogram("att2")]                            # standalone
 
-    def _run(self, spark, df, max_conc):
-        prev = spark.conf.get("spark.deequ.runner.maxConcurrentGroups",
-                              None)
-        spark.conf.set("spark.deequ.runner.maxConcurrentGroups",
-                       str(max_conc))
-        try:
-            return do_analysis_run(df, self._analyzers())
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.deequ.runner.maxConcurrentGroups")
-            else:
-                spark.conf.set("spark.deequ.runner.maxConcurrentGroups",
-                               prev)
-
-    def test_concurrent_equals_sequential(self, spark, df_numeric):
-        seq = self._run(spark, df_numeric, 1)
-        conc = self._run(spark, df_numeric, 3)
-        assert list(seq.metric_map.keys()) == list(conc.metric_map.keys())
-        for a in seq.metric_map:
-            ms, mc = seq.metric_map[a], conc.metric_map[a]
-            assert ms.is_success and mc.is_success, (a, ms, mc)
-            vs = getattr(ms.value, "buckets", ms.value)
+    def test_concurrent_equals_each_alone(self, df_numeric):
+        analyzers = self._analyzers()
+        conc = do_analysis_run(df_numeric, analyzers)
+        assert set(conc.metric_map) == set(analyzers)
+        # results merge in submission order: the key order is fixed
+        again = do_analysis_run(df_numeric, analyzers)
+        assert list(again.metric_map) == list(conc.metric_map)
+        for a in analyzers:
+            mc = conc.metric_map[a]
+            (ma,) = do_analysis_run(df_numeric, [a]).metric_map.values()
+            assert ma.is_success and mc.is_success, (a, ma, mc)
+            va = getattr(ma.value, "buckets", ma.value)
             vc = getattr(mc.value, "buckets", mc.value)
-            assert vs == vc, (a, ms.value, mc.value)
+            assert _same_value(vc, va), (a, ma.value, mc.value)
 
-    def test_states_identical_across_modes(self, spark, df_numeric):
+    def test_states_equal_each_alone(self, df_numeric):
         from deequ_spark import InMemoryStateProvider, run_on_aggregated_states
         analyzers = [Size(), Mean("att1"), Distinctness(("att1",)),
                      Uniqueness(("att2",))]
-        metrics = {}
-        for conc in (1, 3):
-            prov = InMemoryStateProvider()
-            prev = spark.conf.get("spark.deequ.runner.maxConcurrentGroups",
-                                  None)
-            spark.conf.set("spark.deequ.runner.maxConcurrentGroups",
-                           str(conc))
-            try:
-                do_analysis_run(df_numeric, analyzers,
-                                save_states_with=prov)
-            finally:
-                if prev is None:
-                    spark.conf.unset(
-                        "spark.deequ.runner.maxConcurrentGroups")
-                else:
-                    spark.conf.set(
-                        "spark.deequ.runner.maxConcurrentGroups", prev)
-            # states must round-trip to the same metrics scan-free
-            ctx = run_on_aggregated_states(df_numeric, analyzers, [prov])
-            metrics[conc] = {a: m.value for a, m in ctx.metric_map.items()
-                             if m.is_success}
-            assert len(metrics[conc]) == len(analyzers)
-        assert metrics[1] == metrics[3]
+        prov = InMemoryStateProvider()
+        do_analysis_run(df_numeric, analyzers, save_states_with=prov)
+        # states must round-trip to the same metrics scan-free
+        ctx = run_on_aggregated_states(df_numeric, analyzers, [prov])
+        for a in analyzers:
+            alone = InMemoryStateProvider()
+            do_analysis_run(df_numeric, [a], save_states_with=alone)
+            (ma,) = run_on_aggregated_states(
+                df_numeric, [a], [alone]).metric_map.values()
+            mc = ctx.metric_map[a]
+            assert ma.is_success and mc.is_success, (a, ma, mc)
+            assert _same_value(mc.value, ma.value), (a, ma.value, mc.value)
 
     def test_job_group_reaches_pooled_actions(self, spark, df_numeric):
         """setJobGroup is thread-local; inheritable_thread_target must
@@ -313,7 +292,7 @@ class TestConcurrentGroups:
         group = f"conc-group-{uuid.uuid4().hex[:8]}"
         spark.sparkContext.setJobGroup(group, group)
         try:
-            self._run(spark, df_numeric, 3)
+            do_analysis_run(df_numeric, self._analyzers())
         finally:
             spark.sparkContext.setJobGroup(None, None)
         jobs = tracker.getJobIdsForGroup(group) or []
@@ -331,8 +310,7 @@ def _same_value(got, expected):
 
 def _corpus_passes(spark, rows, schema, run):
     """Corpus passes of ``run(df)`` — partitions of the base data computed,
-    over its partition count — with the runner's groups run one at a
-    time; returns (passes, run's result)."""
+    over its partition count; returns (passes, run's result)."""
     acc = spark.sparkContext.accumulator(0)
 
     def tick(it):
@@ -341,15 +319,7 @@ def _corpus_passes(spark, rows, schema, run):
     base = spark.createDataFrame(rows, schema)
     n_parts = base.rdd.getNumPartitions()
     counted = spark.createDataFrame(base.rdd.mapPartitions(tick), schema)
-    prev = spark.conf.get("spark.deequ.runner.maxConcurrentGroups", None)
-    spark.conf.set("spark.deequ.runner.maxConcurrentGroups", "1")
-    try:
-        out = run(counted)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.deequ.runner.maxConcurrentGroups")
-        else:
-            spark.conf.set("spark.deequ.runner.maxConcurrentGroups", prev)
+    out = run(counted)
     assert acc.value % n_parts == 0
     return acc.value // n_parts, out
 

@@ -35,13 +35,12 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import bench  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else \
-    os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+if len(sys.argv) > 1:
+    bench.SF_DIR = sys.argv[1]
+SF_DIR = bench.SF_DIR
 
 NON_PLAN_WORKLOADS = {
     "b3_verification": "tests/test_runner_fusion.py (same fused scan+grouping as b1/b2)",
@@ -53,15 +52,13 @@ NON_PLAN_WORKLOADS = {
 
 
 def build_plans(spark):
-    """name -> DataFrame, mirroring bench.py's workload expressions."""
-    import bench
-
-    lineitem = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    """(name -> DataFrame, cleanup), mirroring bench.py's workload
+    expressions over bench.py's fixtures."""
+    fx, cleanup = bench.fixtures(spark, {"dedup_index", "images",
+                                         "warc_dir"})
+    lineitem, orders, cust = fx["lineitem"], fx["orders"], fx["cust"]
+    docs, emb = fx["docs"], fx["emb"]
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    cust = spark.read.parquet(f"{SF_DIR}/customer.parquet")
 
     plans = {}
 
@@ -167,17 +164,15 @@ def build_plans(spark):
         ev.select("event_id", "user_id", "ts", "value"), "ts", "value",
         window_seconds=3600.0, by="user_id", stats=("sum", "count"))
 
-    idx_pair = bench.prepare_dedup_index(spark, docs)
-    _, dups = dedup_against_index(idx_pair[1], "doc_id", "text",
-                                  idx_pair[0], threshold=0.5)
+    idx_path, idx_batch = fx["dedup_index"]
+    _, dups = dedup_against_index(idx_batch, "doc_id", "text",
+                                  idx_path, threshold=0.5)
     plans["b22_incremental_dedup"] = dups
 
-    imgs = bench.prepare_images(spark)
     plans["b23_image_phash"] = image_near_duplicates(
-        imgs, "img_id", "payload", max_hamming=3)
+        fx["images"], "img_id", "payload", max_hamming=3)
 
-    warc_dir = bench.prepare_warc_dir(spark, docs)
-    chunks, _ = crawl_to_corpus(spark, warc_dir, source="wet",
+    chunks, _ = crawl_to_corpus(spark, fx["warc_dir"], source="wet",
                                 min_words=20, quality_filter=False,
                                 collect_stats=False)
     plans["b24_crawl_ingest"] = chunks
@@ -202,26 +197,13 @@ def build_plans(spark):
         collect_stats=False, gopher_kwargs={"min_stopword_hits": 1})
     plans["b27_pipeline_chain"] = out
 
-    cleanup = [idx_pair[0], warc_dir]
     return plans, cleanup
 
 
 def main():
     from deequ_spark.diagnostics import plan_report
 
-    spark = (SparkSession.builder
-             .master(f"local[{CPUS}]")
-             .appName("deequ-spark-plan-sweep")
-             .config("spark.sql.shuffle.partitions", CPUS)
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.ui.enabled", "false")
-             .config("spark.ui.showConsoleProgress", "false")
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-             .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = bench.session("deequ-spark-plan-sweep")
     plans, cleanup = build_plans(spark)
     reports, violations = {}, []
     for name, df in plans.items():
@@ -247,10 +229,8 @@ def main():
     with open(os.path.join(here, "PLAN_SWEEP_r13.json"), "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
 
+    cleanup()
     spark.stop()
-    import shutil
-    for d in cleanup:
-        shutil.rmtree(d, ignore_errors=True)
 
     if violations:
         print("VIOLATIONS:", violations)
